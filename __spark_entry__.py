@@ -12,16 +12,14 @@ trained classifier matrices, the deflate codec) are value-gated via golden
 parquets computed by the pure-Python oracle library over the same
 deterministic inputs (``testing.goldens`` — zero Spark code) and read back
 with ``read_parquet``. ``pii_counts`` additionally re-counts the bank's
-RE2-expressible subset with the bank's own regexes in SQL, and the LSH/IVF
-ANN paths carry full arithmetic oracles (hyperplanes / centroid picks
-embedded as SQL literals).
+RE2-expressible subset with the bank's own regexes in SQL.
 
-The catalog is consolidated to 50 entries (the driver verifies at most 50
-per round — r03 recorded exactly the first 50 of 64): related operators
-share one gated entry as a tagged union or join of the individually-
-verified components (see plans/queries.py's consolidation note). The
-documents-table goldens assume the driver's sf0.01 differential scale
-(override: ``SPARK_GRAFT_ORACLE_SF_DIR``).
+The catalog holds 30 entries, each serving the page scrub pipeline, a
+redaction surface or the dedup lifecycle: related operators share one
+gated entry as a tagged union or join of the individually-verified
+components (see plans/queries.py's consolidation note). The
+documents-table goldens assume the sf0.01 differential scale (override:
+``SPARK_GRAFT_ORACLE_SF_DIR``).
 """
 
 from __future__ import annotations

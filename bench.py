@@ -80,11 +80,6 @@ EXECUTOR_MEM_MB = int(os.environ.get("BENCH_EXECUTOR_MEM_MB", 8192))
 METER_REF = float(os.environ.get("BENCH_METER_REF", 1171.0))
 
 HEADLINE = [
-    "pricing_summary",
-    "region_revenue",
-    "order_rank_per_customer",
-    "events_sessionized",
-    "events_asof_attribution",
     "doc_quality_agg",
     "scrub_documents",      # full-bank PII scrub + toxicity scrub
     "langid_documents",     # heuristic + fastText-architecture langid
@@ -94,7 +89,6 @@ HEADLINE = [
     "host_rollup",
     "page_signals",         # C4 line filter + Gopher repetition metrics
     "doc_token_stats",      # token stats + compression ratio
-    "embedding_topk",       # brute + LSH + IVF
     "severity_rollup",
     "near_dup_components",
     "pii_counts",           # bank entity counts + SQL-subset counts
@@ -112,8 +106,6 @@ HEADLINE = [
     "quality_funnel",
     "exsub_dedup",
     "token_shards",
-    "semantic_outliers",
-    "embedding_near_dup",   # exact + LSH-bucketed pair sets
     "corpus_summary",
 ]
 
@@ -158,21 +150,6 @@ def run_queries(sf_dir: str) -> dict:
         QUERIES["scrub_documents"](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        # Codegen/JIT warmup for the join+window+higher-order-expr shapes:
-        # the embedding queries' first execution pays ~13s of whole-stage
-        # codegen + AQE JIT that no UDF warmup touches (measured: 22s cold
-        # vs 9s steady for embedding_topk on a quiet host). Run the same
-        # plan shapes once at sf0.001 (2 orders of magnitude smaller data,
-        # identical operators) so the timed region measures steady state.
-        tiny = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-        if os.path.isdir(tiny):
-            # near_dup's pair-scoring self-join is a DIFFERENT codegen shape
-            # from the topk joins (measured: 26s first call vs 5-9s steady
-            # even with the topk shapes already warm)
-            for wname in ("embedding_topk", "embedding_near_dup"):
-                QUERIES[wname](spark, tiny).write.format("noop").mode(
-                    "overwrite"
-                ).save()
         for name in HEADLINE:
             fn = QUERIES[name]
             # min of 2 runs: co-tenant steal is bursty on a tens-of-seconds

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Run any catalog query from the shell (the driver contract, hand-driven):
 
-    python jobs/run_query.py --name pricing_summary [--sf-dir /root/testdata/sf0.01]
+    python jobs/run_query.py --name doc_quality_agg [--sf-dir SF_DIR]
     python jobs/run_query.py --list
     python jobs/run_query.py --name host_quota --check   # also run its DuckDB oracle and diff
 
@@ -53,13 +53,9 @@ def main() -> int:
 
         sql = all_oracles()[args.name]
         con = duckdb.connect()
-        for t in ("region nation customer supplier part orders lineitem "
-                  "events documents embeddings").split():
-            f = os.path.join(args.sf_dir, f"{t}.parquet")
-            if os.path.exists(f):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{f}')"
-                )
+        # the only testdata table the oracles read; the rest is read_parquet
+        f = os.path.join(args.sf_dir, "documents.parquet")
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{f}')")
         from pii_detection_redaction_spark.testing.diffnorm import (
             normalize_for_diff,
         )

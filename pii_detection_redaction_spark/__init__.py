@@ -8,7 +8,7 @@ reference repo ``manansvr/pii-detection-redaction`` (studied read-only at
                  bank, chunker, relationship masking, scrub operators, quality
                  rules, language-ID, n-gram LM. Importable without Spark.
 - ``functions``  vectorized pandas/Arrow UDF factories wrapping ``core``.
-- ``operators``  relational/text operators (dedup, similarity, text stats).
+- ``operators``  text operators (dedup, web, text stats, layout, OCR).
 - ``sources``    readers + snapshot-manifest sink with checkpoint resume.
 - ``plans``      end-to-end pipeline assembly + SparkSession builder.
 - ``streaming``  structured-streaming variants (thin wrappers).

@@ -143,10 +143,6 @@ def simhash64(text: str) -> int:
     return out
 
 
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & U64).count("1")
-
-
 def jaccard_kgrams(a: str, b: str, k: int = 3) -> float:
     sa, sb = set(shingles(a, k)), set(shingles(b, k))
     if not sa and not sb:
@@ -165,20 +161,3 @@ def doc_fingerprint(text: str, k: int = 3) -> int:
     if not sh:
         return U64
     return min(hash64(f"0{SEP}{s}") for s in sh)
-
-
-# --- LSH geometry (semantic constant shared by the Spark engine AND the
-# DuckDB oracle — CLAUDE.md one-spec rule) -----------------------------------
-
-LSH_SEED = 42
-
-
-def lsh_hyperplanes(dim: int, nbits: int, seed: int = LSH_SEED):
-    """Deterministic random-hyperplane set for sign-bucket LSH (Charikar).
-    ``random.Random(seed).gauss`` stream — the exact doubles are the spec:
-    Spark embeds them as literals via F.lit and the DuckDB oracle via
-    repr(), so bucket assignments agree bit-for-bit."""
-    import random
-
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]

@@ -16,8 +16,8 @@ The pikepdf content-stream rendering itself is the ONE part that stays out
 is computed and value-gated.
 
 Char geometry: the reference takes char boxes from pdfminer's layout. This
-environment has no pdf stack, so the layout model is DECLARED (same move as
-the multimodal fake-decode kernel): a monospace grid on US-Letter points —
+environment has no pdf stack, so the layout model is DECLARED: a monospace
+grid on US-Letter points —
 char (line, col) occupies x in [MARGIN + col*CHAR_W, MARGIN + (col+1)*CHAR_W]
 and y in [PAGE_H - MARGIN - (line+1)*LINE_H, PAGE_H - MARGIN - line*LINE_H]
 (PDF origin is bottom-left, so y1 is the line's TOP). A span's box is the
@@ -63,9 +63,6 @@ CONF_DY = 20.0
 # reference redactor.py:111-117 luminance weights + threshold
 LUMA = (0.2126, 0.7152, 0.0722)
 LUMA_WHITE_BELOW = 0.5
-# reference analyzer.py:97-102 _pad_rect default — defined there but UNUSED
-# by the live path; kept for API parity, not applied in the gated plan
-RECT_PAD = 1.5
 # reference analyzer.py:186-195 span post-processing, applied BEFORE the
 # dedup key and the bbox: (a) PERSON/ORGANIZATION spans whose nearest
 # preceding non-whitespace char is ':' skip their leading whitespace;
@@ -129,14 +126,6 @@ def fill_color(entity_type: str) -> Tuple[float, float, float]:
 def label_is_white(rgb: Tuple[float, float, float]) -> bool:
     lum = LUMA[0] * rgb[0] + LUMA[1] * rgb[1] + LUMA[2] * rgb[2]
     return lum < LUMA_WHITE_BELOW
-
-
-def pad_rect(
-    r: Tuple[float, float, float, float], pad: float = RECT_PAD
-) -> Tuple[float, float, float, float]:
-    """reference analyzer.py:97-102 (defined-but-unused helper, API parity)."""
-    x0, y0, x1, y1 = r
-    return (x0 - pad, y0 - pad, x1 + pad, y1 + pad)
 
 
 def plan_row(text: str, start: int, end: int, entity_type: str, score: float) -> dict:

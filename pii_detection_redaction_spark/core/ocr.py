@@ -9,8 +9,8 @@ default 2 — ``redactor.py:26``) and filled/outlined/blurred/pixelated
 (``redactor.py:20-27`` style defaults; ``analyzer.py`` CLI mirrors them).
 Detections below ``score_threshold`` = 0.35 are dropped
 (``redactor.py:48``). The decode + OCR step itself is the declared seam —
-no PIL/tesseract in this environment — exactly the multimodal fake-decode /
-PDF layout-model move: a deterministic kernel stands in for the engine, and
+no PIL/tesseract in this environment — the same move as the PDF layout
+model (core.layout): a deterministic kernel stands in for the engine, and
 everything DOWNSTREAM of it (the word table, the span→word-box mapping, the
 padding/clamp/style arithmetic) is real, Spark-native, and value-gated.
 

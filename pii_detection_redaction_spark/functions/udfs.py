@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..core import chunker as _chunker
-from ..core import extract as _extract
 from ..core import langid as _langid
 from ..core import lm as _lm
 from ..core import scanvec as _scanvec
@@ -49,18 +48,6 @@ DETECTIONS_TYPE = T.ArrayType(DETECTION_TYPE)
 LANGID_TYPE = T.StructType(
     [T.StructField("lang", T.StringType()), T.StructField("conf", T.DoubleType())]
 )
-
-
-def make_extract_udf():
-    """html:binary -> text:string (byte-identical per url; core.extract).
-    Generic-HTML path (tag-strip fallback). The pipeline hot path uses
-    ``extract_text_expr`` (pure JVM) instead."""
-
-    @pandas_udf(T.StringType())
-    def extract_udf(html: pd.Series) -> pd.Series:
-        return html.map(lambda b: _extract.extract_text(b))
-
-    return extract_udf
 
 
 def extract_text_expr(html_col):
@@ -546,14 +533,3 @@ def make_quality_scrub_udf(
         )
 
     return quality_scrub_udf
-
-
-def make_token_count_udf(pattern: str = r"[A-Za-z0-9]+(?:'[a-z]+)?|[^\sA-Za-z0-9]"):
-    """BPE-ish token counting: words+contractions or single symbol chars.
-    Vectorized str.count — no per-row Python."""
-
-    @pandas_udf(T.IntegerType())
-    def token_count_udf(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").str.count(pattern).astype("int32")
-
-    return token_count_udf

@@ -467,9 +467,9 @@ def bloom_bitmap(history, key_col: str, m: int, k: int):
 
     Build cost: one row-local positions UDF over history + a DISTINCT on
     ints bounded by min(n*k, m) — no payload ever shuffles. The driver
-    collect is bounded by m bits (like similarity.py's n_centroids collect),
-    NOT by history size; past the single-bitmap boundary (~10^10 keys) the
-    filter shards by key range instead (core.bloom module doc)."""
+    collect is bounded by m bits, NOT by history size; past the
+    single-bitmap boundary (~10^10 keys) the filter shards by key range
+    instead (core.bloom module doc)."""
     import numpy as np
 
     from ..core import bloom as B

@@ -1,9 +1,10 @@
-"""Text-analysis operators over a documents table: token counting, quality
-scoring, language ID, document fingerprinting.
+"""Text-analysis operators over a documents table: token counting,
+compression ratio, repetition metrics, perplexity buckets, document
+fingerprinting.
 
 JVM column expressions wherever the semantics allow (token counts, quality
-metrics); Arrow-batched UDFs only for langid (shared with the pipeline) and
-md5-based fingerprints (portable to the DuckDB oracle).
+metrics); Arrow-batched UDFs only for the deflate codec and md5-based
+fingerprints (portable to the DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -16,8 +17,6 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..core import hashing as H
 from ..functions import quality as _QF
-from ..functions.quality import add_quality_columns
-from ..functions.udfs import make_langid_udf
 
 # BPE-ish tokenization: alnum runs (with apostrophe contractions) or single
 # non-space symbols — a stable public approximation of subword pre-tokenizers.
@@ -35,47 +34,6 @@ def token_stat_cols(text) -> dict:
         "n_words": F.regexp_count(text, F.lit(_QF.WORD_RE_JVM)),
         "n_tokens": F.regexp_count(text, F.lit(TOKEN_RE)),
     }
-
-
-def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Whitespace words, BPE-ish tokens, chars (frame form of
-    ``token_stat_cols``)."""
-    cols = token_stat_cols(F.col(text_col))
-    return df.select(F.col(id_col), *[v.alias(k) for k, v in cols.items()])
-
-
-def quality_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                   lang_col: str = "lang") -> DataFrame:
-    """Per-doc quality metrics + rule flags + rules_pass (SQL-expressible)."""
-    out = add_quality_columns(df, text_col, lang_col)
-    keep_cols = [id_col, "n_chars", "n_words", "mean_word_len", "symbol_ratio",
-                 "stop_hits", "n_lines", "dup_line_frac", "ellipsis_line_frac",
-                 "rules_pass"]
-    keep_cols += [c for c in out.columns if c.startswith("rule_")]
-    return out.select(*keep_cols)
-
-
-def language_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Vectorized pandas-UDF language-ID (measured ~2.5x faster than the
-    equivalent JVM regexp_count columns — see functions.langid_expr)."""
-    lid = make_langid_udf()
-    return df.select(
-        F.col(id_col), lid(F.col(text_col)).alias("lid")
-    ).select(id_col, F.col("lid.lang").alias("lang_pred"), F.col("lid.conf").alias("lang_conf"))
-
-
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, dup_line_char_frac, top_bigram_char_frac, top_trigram_char_frac):
-    Gopher repetition metrics, row-local JVM expressions
-    (functions.quality.repetition_metric_columns; spec core.quality)."""
-    from ..functions.quality import repetition_metric_columns
-
-    cols = repetition_metric_columns(F.col(text_col))
-    return df.select(
-        F.col(id_col), *[F.round(v, 6).alias(k) for k, v in cols.items()]
-    )
 
 
 def compression_cols(text_col):

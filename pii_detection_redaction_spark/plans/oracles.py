@@ -22,7 +22,6 @@ from ..core import casefold as CF
 from ..core.casefold import ascii_ci_expand
 from ..core.toxicity import MAX_TOXICITY_HITS, TOXIC_MASK, TOXICITY_REGEX_CI
 from .queries import (
-    ACCTBAL_BANDS,
     DATE_RE,
     EMAIL_RE,
     IP_RE,
@@ -31,8 +30,6 @@ from .queries import (
     URL_RE,
     u64_signed_sql,
 )
-
-SEP_SQL = "chr(31)"
 
 
 def _q(s: str) -> str:
@@ -132,213 +129,6 @@ _SHINGLES = (
 )
 
 ORACLE_SQL = {}
-
-# ---------------------------------------------------------------------------
-# relational
-# ---------------------------------------------------------------------------
-
-ORACLE_SQL["pricing_summary"] = """
-SELECT l_returnflag, l_linestatus,
-  round(sum(l_quantity), 2) AS sum_qty,
-  round(sum(l_extendedprice), 2) AS sum_base_price,
-  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-  round(avg(l_quantity), 4) AS avg_qty,
-  count(*) AS count_order
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-ORACLE_SQL["top_customers"] = """
-SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 10
-"""
-
-ORACLE_SQL["region_revenue"] = """
-SELECT r_name,
-  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-  count(DISTINCT o_orderkey) AS n_orders
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name ORDER BY r_name
-"""
-
-ORACLE_SQL["supplier_balance_by_nation"] = """
-SELECT n_name, round(sum(s_acctbal), 2) AS total_acctbal, count(*) AS n_suppliers
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
-"""
-
-ORACLE_SQL["customers_without_orders"] = """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-ORDER BY c_custkey
-"""
-
-ORACLE_SQL["order_rank_per_customer"] = """
-SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS total_price, rk FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rk
-  FROM orders
-) WHERE rk <= 3 ORDER BY o_custkey, rk
-"""
-
-ORACLE_SQL["sales_cube"] = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       count(*) AS n_rows
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY returnflag, linestatus
-"""
-
-ORACLE_SQL["segment_setops"] = """
-SELECT c_custkey FROM (
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-  UNION
-  SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
-)
-EXCEPT
-SELECT c_custkey FROM customer WHERE c_acctbal < 0
-ORDER BY c_custkey
-"""
-
-ORACLE_SQL["events_hourly"] = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-FROM events
-GROUP BY 1, 2 ORDER BY hour, event_type
-"""
-
-ORACLE_SQL["events_sessionized"] = """
-WITH x AS (
-  SELECT user_id, ts,
-    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
-  FROM events
-)
-SELECT user_id,
-  CAST(sum(CASE WHEN pts IS NULL OR (epoch_us(ts) - epoch_us(pts)) > 1800000000
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-  count(*) AS n_events
-FROM x GROUP BY user_id ORDER BY user_id
-"""
-
-ORACLE_SQL["events_pivot"] = """
-SELECT user_id,
-  CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n_click,
-  CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS n_error,
-  CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS n_purchase,
-  CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS n_signup,
-  CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n_view
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-ORACLE_SQL["event_transitions"] = """
-WITH x AS (
-  SELECT user_id, event_type,
-    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-  FROM events
-)
-SELECT prev_type AS from_type, event_type AS to_type,
-       CAST(count(*) AS BIGINT) AS n
-FROM x WHERE prev_type IS NOT NULL AND event_type IS NOT NULL
-GROUP BY 1, 2 ORDER BY from_type, to_type
-"""
-
-ORACLE_SQL["events_json"] = """
-SELECT event_type,
-  round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)), 4) AS avg_k,
-  max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k,
-  count(*) AS n
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-ORACLE_SQL["rolling_revenue"] = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day, sum(o_totalprice) AS day_rev,
-         datediff('day', DATE '1990-01-01', date_trunc('day', o_orderdate)) AS day_n
-  FROM orders GROUP BY 1
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, round(day_rev, 2) AS day_rev,
-  round(sum(day_rev) OVER (ORDER BY day_n RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS rev7
-FROM daily ORDER BY day
-"""
-
-ORACLE_SQL["nation_coverage"] = """
-WITH c AS (SELECT c_nationkey AS nationkey, count(*) AS n_customers FROM customer GROUP BY 1),
-     s AS (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers FROM supplier GROUP BY 1)
-SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-       coalesce(n_customers, 0) AS n_customers,
-       coalesce(n_suppliers, 0) AS n_suppliers
-FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-ORDER BY nationkey
-"""
-
-ORACLE_SQL["promo_revenue"] = """
-WITH j AS (
-  SELECT strftime(date_trunc('month', l_shipdate), '%Y-%m') AS month,
-    CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END AS promo,
-    l_extendedprice * (1 - l_discount) AS rev
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), a AS (
-  SELECT month, round(sum(promo), 2) AS promo_revenue,
-         round(sum(rev), 2) AS total_revenue, count(*) AS n_items
-  FROM j GROUP BY month
-)
-SELECT month, promo_revenue, total_revenue,
-  round(100.0 * promo_revenue / total_revenue, 4) AS promo_pct, n_items
-FROM a ORDER BY month
-"""
-
-ORACLE_SQL["events_asof_attribution"] = """
-WITH p AS (
-  SELECT event_id AS purchase_id, user_id, ts FROM events WHERE event_type = 'purchase'
-), v0 AS (
-  SELECT user_id, ts, event_id AS view_id, value,
-    row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-  FROM events WHERE event_type = 'view'
-), v AS (
-  -- max view_id per (user_id, ts): mirrors the Spark side's tiebreak so the
-  -- ASOF pick is deterministic even if the corpus ever grows duplicate ts
-  SELECT user_id, ts, view_id, value FROM v0 WHERE rn = 1
-)
-SELECT p.purchase_id, p.user_id,
-  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-  v.view_id, round(v.value, 2) AS view_value
-FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-ORDER BY purchase_id
-"""
-
-_BANDS_VALUES = ", ".join(f"('{b}', {lo}, {hi})" for b, lo, hi in ACCTBAL_BANDS)
-
-ORACLE_SQL["acctbal_range_join"] = f"""
-WITH bands(band, lo, hi) AS (VALUES {_BANDS_VALUES})
-SELECT band, count(*) AS n_customers, round(sum(c_acctbal), 2) AS sum_acctbal
-FROM customer JOIN bands ON c_acctbal >= lo AND c_acctbal < hi
-GROUP BY band ORDER BY band
-"""
-
-# same double arithmetic / association order as the Spark F.aggregate fold
-_ND_DOT = "list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-_ND_ANORM = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))"
-_ND_BNORM = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))"
-
-ORACLE_SQL["embedding_near_dup"] = f"""
-WITH p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-    round({_ND_DOT} / ({_ND_ANORM} * {_ND_BNORM}), 6) AS cosine
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.40 ORDER BY id_a, id_b
-"""
 
 # ---------------------------------------------------------------------------
 # documents: quality / stats / langid
@@ -477,8 +267,6 @@ FROM s ORDER BY doc_id
 """
 
 
-ORACLE_SQL["langid_documents"] = _langid_sql()
-
 ORACLE_SQL["doc_fingerprints"] = f"""
 WITH docs AS (
   SELECT doc_id, text, regexp_extract_all(lower(text), '{_WORDS}') AS ws FROM documents
@@ -494,7 +282,7 @@ FROM sh ORDER BY doc_id
 """
 
 # ---------------------------------------------------------------------------
-# dedup / similarity
+# dedup / fingerprints
 # ---------------------------------------------------------------------------
 
 ORACLE_SQL["exact_dup_keepers"] = """
@@ -609,140 +397,6 @@ FROM reach GROUP BY a ORDER BY doc_id
 
 
 ORACLE_SQL["near_dup_components"] = _near_dup_components_sql()
-
-_DOT = "list_sum(list_transform(range(1, 65), i -> CAST(q.qe[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))"
-_INORM = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))"
-_QNORM = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))))"
-
-ORACLE_SQL["embedding_topk"] = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-p AS (
-  SELECT q.query_id, e.vec_id,
-    {_DOT} / ({_INORM} * {_QNORM}) AS cosine_raw
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-), r AS (
-  SELECT query_id, vec_id, cosine_raw,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine_raw DESC, vec_id) AS INTEGER) AS rank
-  FROM p
-)
-SELECT query_id, vec_id, round(cosine_raw, 6) AS cosine, rank
-FROM r WHERE rank <= 5 ORDER BY query_id, rank
-"""
-
-
-def _lit_list(vals) -> str:
-    """DuckDB double-list literal with round-trip-exact float repr (same
-    doubles Spark gets from F.lit(float(w)))."""
-    return "[" + ", ".join(repr(float(v)) for v in vals) + "]"
-
-
-def _dot_lit(vec_expr: str, vals) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {len(vals) + 1}), "
-        f"j -> CAST({vec_expr}[j] AS DOUBLE) * ({_lit_list(vals)})[j]))"
-    )
-
-
-def _lsh_topk_sql() -> str:
-    """Oracle for embedding_lsh_topk: the bucket key is plain arithmetic —
-    sign bits of dot(embedding, hyperplane_i) with the SAME deterministic
-    seeded hyperplanes embedded as literals (operators.similarity
-    core.hashing.lsh_hyperplanes, seed 42); re-rank is the exact cosine
-    inside the bucket."""
-    from ..core.hashing import lsh_hyperplanes
-
-    planes = lsh_hyperplanes(dim=64, nbits=4)
-    bucket = " + ".join(
-        f"(CASE WHEN {_dot_lit('embedding', p)} >= 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH it AS (
-  SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qe, bucket FROM it WHERE vec_id < 5
-), p AS (
-  SELECT q.query_id, e.vec_id,
-    {_DOT} / ({_INORM} * {_QNORM}) AS cosine_raw
-  FROM it e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.query_id
-), r AS (
-  SELECT query_id, vec_id, cosine_raw,
-    CAST(row_number() OVER (PARTITION BY query_id
-         ORDER BY cosine_raw DESC, vec_id) AS INTEGER) AS rank
-  FROM p
-)
-SELECT query_id, vec_id, round(cosine_raw, 6) AS cosine, rank
-FROM r WHERE rank <= 5 ORDER BY query_id, rank
-"""
-
-
-ORACLE_SQL["embedding_lsh_topk"] = _lsh_topk_sql()
-
-
-def _ivf_topk_sql(n_centroids: int = 16, n_probe: int = 6, k: int = 5) -> str:
-    """Oracle for embedding_ivf_topk: centroids are the n lowest-id vectors
-    (deterministic pick, similarity._centroids); items assign to their
-    max-cosine centroid with FIRST-index tie-break (array_position
-    semantics); queries probe the n_probe best centroids ranked cosine DESC
-    with index-DESC tie-break (matching Spark's reverse(array_sort(...)))."""
-    cdot = (
-        "list_sum(list_transform(range(1, 65), "
-        "j -> CAST(x.embedding[j] AS DOUBLE) * CAST(c.ce[j] AS DOUBLE)))"
-    )
-    cnx = (
-        "sqrt(list_sum(list_transform(range(1, 65), "
-        "j -> CAST(x.embedding[j] AS DOUBLE) * CAST(x.embedding[j] AS DOUBLE))))"
-    )
-    cnc = (
-        "sqrt(list_sum(list_transform(range(1, 65), "
-        "j -> CAST(c.ce[j] AS DOUBLE) * CAST(c.ce[j] AS DOUBLE))))"
-    )
-    return f"""
-WITH c0 AS (
-  SELECT vec_id, embedding AS ce,
-    CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) - 1 AS idx
-  FROM embeddings ORDER BY vec_id LIMIT {n_centroids}
-), c AS (SELECT idx, ce FROM c0),
-sims AS (
-  SELECT x.vec_id, c.idx, {cdot} / ({cnx} * {cnc}) AS s
-  FROM embeddings x CROSS JOIN c
-), assign AS (
-  SELECT vec_id, idx AS centroid FROM (
-    SELECT vec_id, idx,
-      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, idx) AS rn
-    FROM sims
-  ) WHERE rn = 1
-), probes AS (
-  SELECT vec_id AS query_id, idx AS centroid FROM (
-    SELECT vec_id, idx,
-      row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, idx DESC) AS rn
-    FROM sims WHERE vec_id < 5
-  ) WHERE rn <= {n_probe}
-), cand AS (
-  SELECT p.query_id, a.vec_id
-  FROM probes p JOIN assign a ON a.centroid = p.centroid
-  WHERE a.vec_id <> p.query_id
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-    {_DOT} / ({_INORM} * {_QNORM}) AS cosine_raw
-  FROM cand
-  JOIN embeddings e ON e.vec_id = cand.vec_id
-  JOIN (SELECT vec_id AS query_id, embedding AS qe FROM embeddings) q
-    ON q.query_id = cand.query_id
-), r AS (
-  SELECT query_id, vec_id, cosine_raw,
-    CAST(row_number() OVER (PARTITION BY query_id
-         ORDER BY cosine_raw DESC, vec_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, round(cosine_raw, 6) AS cosine, rank
-FROM r WHERE rank <= {k} ORDER BY query_id, rank
-"""
-
-
-ORACLE_SQL["embedding_ivf_topk"] = _ivf_topk_sql()
-
 
 def _severity_rollup_sql() -> str:
     values = ", ".join(f"('{e}', '{s}')" for e, s in SEVERITY_DIM)
@@ -975,41 +629,6 @@ SELECT url,
        md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5,
        CAST(len(lines) - len(kept) AS BIGINT) AS n_lines_removed
 FROM l ORDER BY url
-"""
-
-
-def _semantic_outliers_sql() -> str:
-    """Centroid recomputed relationally (per-position avg over the same
-    64-dim table the ANN oracles hardcode), cosine in the same
-    dot/(na*nc) association, outlier flag on the 6dp-ROUNDED cosine (the
-    unrounded value carries engine-specific summation-order noise in the
-    last ulps, which near the threshold could flip the flag in one engine
-    only — same convention as the Spark query)."""
-    from ..operators.similarity import SEM_OUTLIER_MIN
-
-    return f"""
-WITH e AS (SELECT vec_id, embedding FROM embeddings),
-c AS (
-  SELECT pos, avg(CAST(embedding[pos] AS DOUBLE)) AS m
-  FROM e CROSS JOIN (SELECT unnest(range(1, 65)) AS pos)
-  GROUP BY pos
-),
-ca AS (SELECT list(m ORDER BY pos) AS cen FROM c),
-s AS (
-  SELECT vec_id,
-    list_sum(list_transform(range(1, 65),
-      i -> CAST(embedding[i] AS DOUBLE) * cen[i])) /
-    (sqrt(list_sum(list_transform(range(1, 65),
-      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
-     * sqrt(list_sum(list_transform(range(1, 65), i -> cen[i] * cen[i]))))
-      AS cos
-  FROM e, ca
-)
-SELECT vec_id, round(cos, 6) AS cos_centroid,
-       -- flag on the ROUNDED value: the unrounded cosine carries
-       -- engine-specific summation-order noise in the last ulps
-       round(cos, 6) < {SEM_OUTLIER_MIN} AS is_outlier
-FROM s ORDER BY vec_id
 """
 
 
@@ -1566,103 +1185,6 @@ ORDER BY f.doc_id
 """
 
 
-def _embedding_topk_methods_sql() -> str:
-    return f"""
-SELECT 'brute' AS method, query_id, vec_id, cosine, rank
-FROM {_sub(ORACLE_SQL["embedding_topk"])} b
-UNION ALL
-SELECT 'lsh', query_id, vec_id, cosine, rank
-FROM {_sub(_lsh_topk_sql())} l
-UNION ALL
-SELECT 'ivf', query_id, vec_id, cosine, rank
-FROM {_sub(_ivf_topk_sql())} i
-ORDER BY method, query_id, rank
-"""
-
-
-def _near_dup_lsh_sql() -> str:
-    """The bucketed near-dup pair set re-derived: the bucket key is plain
-    arithmetic — sign bits of dot(embedding, hyperplane_i) with the SAME
-    deterministic seeded hyperplanes embedded as literals (core.hashing.
-    lsh_hyperplanes, seed 42, the exact planes operators.similarity.
-    cosine_near_dup_lsh uses) — candidates are same-bucket pairs only, then
-    the exact rounded cosine filters."""
-    from ..core.hashing import lsh_hyperplanes
-
-    planes = lsh_hyperplanes(dim=64, nbits=4)
-    bucket = " + ".join(
-        f"(CASE WHEN {_dot_lit('embedding', p)} >= 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH it AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-    round({_ND_DOT} / ({_ND_ANORM} * {_ND_BNORM}), 6) AS cosine
-  FROM it a JOIN it b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.40 ORDER BY id_a, id_b
-"""
-
-
-def _embedding_near_dup_methods_sql() -> str:
-    return f"""
-SELECT 'exact' AS method, id_a, id_b, cosine
-FROM {_sub(ORACLE_SQL["embedding_near_dup"])} e
-UNION ALL
-SELECT 'lsh', id_a, id_b, cosine
-FROM {_sub(_near_dup_lsh_sql())} l
-ORDER BY method, id_a, id_b
-"""
-
-
-def _multimodal_joined_sql() -> str:
-    from ..operators.multimodal import FAKE_DIM_MAX as _D
-
-    fcols = ", ".join(f"fe.f{i}" for i in range(_D))
-    return f"""
-SELECT fr.media_id, fr.frame_idx, fr.resize_scale, fr.target_w, fr.target_h,
-       fe.payload_md5, fe.n_bytes, {fcols}
-FROM {_sub(ORACLE_SQL["multimodal_frames"])} fr
-JOIN {_sub(_multimodal_sql())} fe USING (media_id)
-ORDER BY fr.media_id, fr.frame_idx
-"""
-
-
-_NATION_PROFILE_SQL = """
-WITH c AS (SELECT c_nationkey AS nationkey, count(*) AS n_customers
-           FROM customer GROUP BY 1),
-     s AS (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers,
-                  round(sum(s_acctbal), 2) AS total_acctbal
-           FROM supplier GROUP BY 1),
-     cov AS (
-       SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-              coalesce(n_customers, 0) AS n_customers,
-              coalesce(n_suppliers, 0) AS n_suppliers,
-              coalesce(total_acctbal, 0.0) AS total_acctbal
-       FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey)
-SELECT cov.nationkey, n.n_name, cov.n_customers, cov.n_suppliers,
-       cov.total_acctbal
-FROM cov LEFT JOIN nation n ON cov.nationkey = n.n_nationkey
-ORDER BY cov.nationkey
-"""
-
-_CUSTOMER_ORDER_EXTREMES_SQL = """
-SELECT 'top10' AS kind, c_custkey, c_name, revenue, n_orders FROM (
-  SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS revenue,
-         count(*) AS n_orders
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY c_custkey, c_name
-  ORDER BY revenue DESC, c_custkey LIMIT 10)
-UNION ALL
-SELECT 'no_orders', c_custkey, c_name, CAST(NULL AS DOUBLE),
-       CAST(NULL AS BIGINT)
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-ORDER BY kind, c_custkey
-"""
-
-
 def all_oracles() -> dict:
     """Oracle map for EXACTLY the catalog entries (plans.queries.QUERIES) —
     every entry carries a value-level oracle. Assembled here rather than at
@@ -1749,64 +1271,8 @@ FROM read_parquet('{g["scrub_pages"]}') ORDER BY url
         "minhash_bands": ORACLE_SQL["minhash_bands"],
         "jaccard_consecutive": ORACLE_SQL["jaccard_consecutive"],
         "near_dup_components": ORACLE_SQL["near_dup_components"],
-        "embedding_topk": _embedding_topk_methods_sql(),
-        "embedding_near_dup": _embedding_near_dup_methods_sql(),
-        "semantic_outliers": _semantic_outliers_sql(),
-        "multimodal": _multimodal_joined_sql(),
         "severity_rollup": ORACLE_SQL["severity_rollup"],
-        "events_asof_attribution": ORACLE_SQL["events_asof_attribution"],
-        "acctbal_range_join": ORACLE_SQL["acctbal_range_join"],
-        "pricing_summary": ORACLE_SQL["pricing_summary"],
-        "customer_order_extremes": _CUSTOMER_ORDER_EXTREMES_SQL,
-        "region_revenue": ORACLE_SQL["region_revenue"],
-        "nation_profile": _NATION_PROFILE_SQL,
-        "promo_revenue": ORACLE_SQL["promo_revenue"],
-        "rolling_revenue": ORACLE_SQL["rolling_revenue"],
-        "order_rank_per_customer": ORACLE_SQL["order_rank_per_customer"],
-        "sales_cube": ORACLE_SQL["sales_cube"],
-        "segment_setops": ORACLE_SQL["segment_setops"],
-        "events_hourly": ORACLE_SQL["events_hourly"],
-        "events_sessionized": ORACLE_SQL["events_sessionized"],
-        "events_json": ORACLE_SQL["events_json"],
-        "event_transitions": ORACLE_SQL["event_transitions"],
-        "events_pivot": ORACLE_SQL["events_pivot"],
     }
-
-
-def _mm_u16(src: str, i: int) -> str:
-    from ..operators.multimodal import U16_SCALE
-
-    return f"CAST(({src} >> {16 * i}) & 65535 AS DOUBLE) / {U16_SCALE}"
-
-
-def _multimodal_sql() -> str:
-    from ..operators.multimodal import FAKE_DIM_MAX as _D
-
-    vals = [_mm_u16("hu", i) for i in range(_D // 2)] + [
-        _mm_u16("hl", i) for i in range(_D // 2)
-    ]
-    norm = " + ".join(f"v{i} * v{i}" for i in range(_D))
-    fcols = ", ".join(
-        f"round(CAST(CAST(v{i} / norm AS FLOAT) AS DOUBLE), 6) AS f{i}"
-        for i in range(_D)
-    )
-    vdefs = ", ".join(f"{v} AS v{i}" for i, v in enumerate(vals))
-    return f"""
-WITH d AS (
-  SELECT doc_id AS media_id, text FROM documents WHERE doc_id < 200
-), h AS (
-  SELECT media_id, md5(text) AS payload_md5,
-    CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-    md5_number_upper(text) AS hu, md5_number_lower(text) AS hl
-  FROM d
-), u AS (
-  SELECT media_id, payload_md5, n_bytes, {vdefs} FROM h
-), n AS (
-  SELECT *, CASE WHEN sqrt({norm}) = 0 THEN 1.0 ELSE sqrt({norm}) END AS norm FROM u
-)
-SELECT media_id, payload_md5, n_bytes, {fcols}
-FROM n ORDER BY media_id
-"""
 
 
 def _hash_sample_sql() -> str:
@@ -1825,9 +1291,6 @@ WHERE substr(md5('{S.SAMPLE_SALT}' || CAST(doc_id AS VARCHAR)), 1, {S.HEX_DIGITS
       < CASE lang {whens} ELSE '{S.hex_threshold(S.DEFAULT_RATE)}' END
 ORDER BY doc_id
 """
-
-
-ORACLE_SQL["hash_sample"] = _hash_sample_sql()
 
 
 def _budget_sample_sql() -> str:
@@ -1871,9 +1334,6 @@ ORDER BY t.doc_id
 """
 
 
-ORACLE_SQL["budget_sample"] = _budget_sample_sql()
-
-
 def _token_shards_sql() -> str:
     """The NAIVE single global window (the plan that cannot scale) — if the
     engine's two-phase bucket prefix sum diverges from it by one token
@@ -1903,34 +1363,3 @@ FROM r ORDER BY doc_id
 
 
 ORACLE_SQL["token_shards"] = _token_shards_sql()
-
-ORACLE_SQL["multimodal_features"] = _multimodal_sql()
-
-# frame sampling × resize geometry: same metadata arithmetic, same fit
-# formula (scale = min(1, 512/w, 512/h); target = max(1, round(dim*scale)))
-# — double division/multiplication in the same order as the Spark columns,
-# and round() agrees with Spark's HALF_UP for positive values.
-from ..operators.multimodal import FRAME_EVERY_N as _MM_N
-from ..operators.multimodal import RESIZE_MAX_DIM as _MM_DIM
-
-ORACLE_SQL["multimodal_frames"] = f"""
-WITH m AS (
-  SELECT doc_id AS media_id,
-    CAST(100 + doc_id % 1900 AS INTEGER) AS w,
-    CAST(100 + doc_id % 980 AS INTEGER) AS h,
-    CAST(doc_id % 91 AS INTEGER) AS nf
-  FROM documents WHERE doc_id < 300
-), f AS (
-  SELECT media_id, w, h, CAST(unnest(range(0, nf, {_MM_N})) AS INTEGER) AS frame_idx
-  FROM m WHERE nf > 0
-), s AS (
-  SELECT media_id, frame_idx,
-    least(1.0, {float(_MM_DIM)} / CAST(w AS DOUBLE), {float(_MM_DIM)} / CAST(h AS DOUBLE)) AS sc,
-    CAST(w AS DOUBLE) AS wd, CAST(h AS DOUBLE) AS hd
-  FROM f
-)
-SELECT media_id, frame_idx, round(sc, 6) AS resize_scale,
-  CAST(greatest(round(wd * sc), 1) AS INTEGER) AS target_w,
-  CAST(greatest(round(hd * sc), 1) AS INTEGER) AS target_h
-FROM s ORDER BY media_id, frame_idx
-"""

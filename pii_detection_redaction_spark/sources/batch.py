@@ -38,7 +38,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.sanitize import safe_filename
+from ..core.sanitize import claim_filename, safe_filename
 from ..functions.udfs import make_detect_udf, make_scrub_udf
 from ..operators.csvops import cell_detections_long
 from .csv import ROW_FILE, ROW_ID, read_csv, redact_csv, write_csv
@@ -108,20 +108,6 @@ def batch_redact(
     manifest: Dict = {"files": {}, "total_detections": 0}
     used_names: Set[str] = set()
 
-    def _claim(name: str) -> str:
-        """Collision-safe artifact name: a .csv and a .txt sharing a stem
-        would both emit ``{stem}_detections.json`` — the second claim gets
-        a ``_2`` suffix instead of silently overwriting the first artifact
-        (and double-zipping the same entry name)."""
-        name = safe_filename(name)
-        base, ext = os.path.splitext(name)
-        n, candidate = 1, name
-        while candidate in used_names:
-            n += 1
-            candidate = f"{base}_{n}{ext}"
-        used_names.add(candidate)
-        return candidate
-
     def _summary(det_rows: List[dict]) -> Dict:
         by_type: Dict[str, int] = {}
         cells = set()
@@ -165,7 +151,7 @@ def batch_redact(
                         f"use run_csv_redact / the directory sinks for large "
                         f"extracts, or pass max_export_rows=None"
                     )
-            red_name = _claim(f"{stem}_redacted.csv")
+            red_name = claim_filename(f"{stem}_redacted.csv", used_names)
             red_path = os.path.join(output_dir, red_name)
             _single_csv(out["redacted"], red_path, delimiter, header)
             artifacts.append(red_path)
@@ -194,7 +180,10 @@ def batch_redact(
                 for r in out["detections"].collect()
             ]
             if save_json:
-                jp = os.path.join(output_dir, _claim(f"{stem}_detections.json"))
+                jp = os.path.join(
+                    output_dir,
+                    claim_filename(f"{stem}_detections.json", used_names),
+                )
                 with open(jp, "w", encoding="utf-8") as f:
                     f.write(_detections_json(det_rows))
                 artifacts.append(jp)
@@ -241,7 +230,7 @@ def batch_redact(
             # csv entries, which are keyed from decoded glob paths)
             base = os.path.basename(unquote(urlparse(r["path"]).path))
             stem = os.path.splitext(base)[0]
-            red_name = _claim(f"{stem}_redacted.txt")
+            red_name = claim_filename(f"{stem}_redacted.txt", used_names)
             red_path = os.path.join(output_dir, red_name)
             with open(red_path, "w", encoding="utf-8") as f:
                 f.write(r["scrubbed"])
@@ -260,7 +249,10 @@ def batch_redact(
                 for d in r["dets"]
             ]
             if save_json:
-                jp = os.path.join(output_dir, _claim(f"{stem}_detections.json"))
+                jp = os.path.join(
+                    output_dir,
+                    claim_filename(f"{stem}_detections.json", used_names),
+                )
                 with open(jp, "w", encoding="utf-8") as f:
                     f.write(_detections_json(det_rows))
                 artifacts.append(jp)

@@ -19,14 +19,14 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Optional
+from typing import Optional, Set
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import pdfwrite as PW
-from ..core.sanitize import safe_filename
+from ..core.sanitize import claim_filename
 
 PLAN_COLS = [
     "start", "end", "entity_type", "value", "x0", "y0", "rect_w", "rect_h",
@@ -92,6 +92,8 @@ def save_redacted_pdfs(
 ) -> int:
     """Stream rendered PDFs to ``{out_dir}/{safe_filename(id)}.pdf`` one at
     a time (driver holds one file's bytes); returns the file count.
+    Ids that sanitize to one name get ``core.sanitize.claim_filename``'s
+    ``_2``/``_3`` suffixes, so every row lands in its own file.
     ``max_files`` bounds this export surface the same way the zip sink is
     bounded — corpus-scale output belongs in parquet (the ``rendered``
     frame itself writes as a binary column).
@@ -107,6 +109,7 @@ def save_redacted_pdfs(
         shutil.rmtree(tmp)
     os.makedirs(tmp)
     n = 0
+    used: Set[str] = set()
     try:
         for row in rendered.select(id_col, "pdf").toLocalIterator():
             if max_files is not None and n >= max_files:
@@ -116,7 +119,7 @@ def save_redacted_pdfs(
                     f"parquet for corpus-scale output, or pass "
                     f"max_files=None"
                 )
-            name = safe_filename(f"{row[id_col]}.pdf")
+            name = claim_filename(f"{row[id_col]}.pdf", used)
             with open(os.path.join(tmp, name), "wb") as f:
                 f.write(row["pdf"])
             n += 1

@@ -1,70 +1,4 @@
-"""Bucketed co-located join (no Exchange) + streaming watermark windows."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from pii_detection_redaction_spark.sources.bucketed import colocated_join, write_bucketed
-from pii_detection_redaction_spark.streaming.windows import windowed_event_counts
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_bucketed_join_has_no_exchange(spark, sf001_dir, tmp_path_factory):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = spark.read.parquet(f"{sf001_dir}/orders.parquet")
-        customer = spark.read.parquet(f"{sf001_dir}/customer.parquet").withColumnRenamed(
-            "c_custkey", "o_custkey"
-        )
-        write_bucketed(orders, "b_orders", ["o_custkey"], 8, sort_cols=["o_custkey"])
-        write_bucketed(customer, "b_customer", ["o_custkey"], 8, sort_cols=["o_custkey"])
-        joined = colocated_join(spark, "b_orders", "b_customer", ["o_custkey"])
-        plan = _plan(joined)
-        assert "Exchange" not in plan  # co-located: bucket-aligned SMJ
-        # and it actually computes the right thing
-        expected = orders.join(customer, "o_custkey").count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
-def test_streaming_windowed_counts_match_batch(spark, sf001_dir, tmp_path):
-    import os
-
-    src = tmp_path / "ev_in"
-    src.mkdir()
-    os.symlink(f"{sf001_dir}/events.parquet", src / "part-0.parquet")
-
-    batch = spark.read.parquet(f"{sf001_dir}/events.parquet")
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_event_counts(batch).collect()
-    }
-
-    stream = (
-        spark.readStream.schema(batch.schema).format("parquet").load(str(src))
-    )
-    out = windowed_event_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    assert got == expected
-    assert len(got) > 10
+"""Streaming stateful first-seen dedup (applyInPandasWithState)."""
 
 
 def test_stateful_first_seen_dedup_across_drains(spark, tmp_path):

@@ -123,10 +123,10 @@ def test_keep_first_vs_hot_set_strip(spark):
 def test_keep_first_nonvacuous_on_corpus(spark):
     """The pages corpus plants within-doc repeats (arch 3) and cross-doc
     boilerplate — the catalog query must actually remove lines."""
-    from pii_detection_redaction_spark.plans.queries import q_c4_line_dedup
+    from pii_detection_redaction_spark.plans.queries import q_line_dedup_pages
 
-    out = q_c4_line_dedup(spark, None)
-    removed = out.agg(F.sum("n_lines_removed")).collect()[0][0]
+    out = q_line_dedup_pages(spark, None)
+    removed = out.agg(F.sum("c4first_lines_removed")).collect()[0][0]
     assert removed > 100
 
 

@@ -1,5 +1,5 @@
-"""Operator tests: dedup recall on planted near-dups, LSH ANN recall vs
-brute force, cell-wise CSV redaction, multimodal plumbing, streaming drain."""
+"""Operator tests: dedup recall on planted near-dups, cell-wise CSV
+redaction, sampling, decontamination, packing, layout/OCR, streaming drain."""
 
 import random
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from pii_detection_redaction_spark.core import hashing as H
 from pii_detection_redaction_spark.operators import dedup as D
-from pii_detection_redaction_spark.operators import similarity as SIM
 from pii_detection_redaction_spark.operators.csvops import (
     cell_detections_long,
     detect_cells,
@@ -16,11 +15,16 @@ from pii_detection_redaction_spark.operators.csvops import (
     redact_cells,
     unpivot_cells,
 )
-from pii_detection_redaction_spark.operators.multimodal import (
-    extract_features,
-    fake_feature_kernel,
-    frame_sample_plan,
-)
+
+
+# Account-balance bands (half-open [lo, hi)) covering the TPC-H c_acctbal range.
+ACCTBAL_BANDS = [
+    ("neg", -1000.0, 0.0),
+    ("low", 0.0, 2500.0),
+    ("mid", 2500.0, 5000.0),
+    ("high", 5000.0, 7500.0),
+    ("top", 7500.0, 10000.0),
+]
 
 
 def _near_dup_corpus():
@@ -104,27 +108,6 @@ def test_simhash_near_pairs(spark, dup_df):
         assert r["hamming"] <= 10
 
 
-def test_lsh_ann_recall_vs_bruteforce(spark, sf001_dir):
-    e = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = SIM.cosine_topk_bruteforce(e, q, k=5).collect()
-    # random 64-dim vectors have no cluster structure, so sign-LSH recall is
-    # inherently modest — 2 bits (4 buckets) verifies the mechanism
-    approx = SIM.cosine_topk_lsh(e, q, dim=64, k=5, nbits=2).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact_sets[qid] & approx_sets.get(qid, set())) / 5 for qid in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.2
-
-
 def test_csv_cell_redaction(spark):
     rows = [
         (1, "Bob Smith", "bob.smith@ex.com", "tfn 123-456-789"),
@@ -149,32 +132,6 @@ def test_csv_cell_redaction(spark):
     assert len(email_cell["redacted_cell"]) == len("bob.smith@ex.com")  # mask preserves length
     summary = detection_summary(dets, "row_id").collect()
     assert all(r["n_detections"] >= r["n_cells"] for r in summary)
-
-
-def test_multimodal_feature_plumbing(spark):
-    rows = [(i, f"payload-{i}".encode()) for i in range(20)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    feats = extract_features(df).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert len(r["feature"]) == 8
-        expected = fake_feature_kernel(f"payload-{r['media_id']}".encode())
-        assert [pytest.approx(x, rel=1e-6) for x in expected] == list(r["feature"])
-        norm = sum(x * x for x in r["feature"])
-        assert norm == pytest.approx(1.0, rel=1e-5)
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
-        [(1, ("video", 640, 480, 95, None)), (2, ("image", 100, 100, 0, None))],
-        "media_id long, meta struct<media_type:string,width:int,height:int,n_frames:int,sample_rate:int>",
-    )
-    out = frame_sample_plan(df, every_n=30).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert sorted(by_id[1]) == [0, 30, 60, 90]
-    assert 2 not in by_id  # zero frames → no rows
 
 
 def test_streaming_pipeline_drain(spark, pages_small, tmp_path):
@@ -247,7 +204,6 @@ def test_asof_join_tiebreak(spark):
 
 def test_bin_range_join_equals_inequality_join(spark, sf001_dir):
     from pii_detection_redaction_spark.operators.joins import bin_range_join
-    from pii_detection_redaction_spark.plans.queries import ACCTBAL_BANDS
 
     c = spark.read.parquet(f"{sf001_dir}/customer.parquet").select(
         "c_custkey", "c_acctbal"
@@ -262,41 +218,6 @@ def test_bin_range_join_equals_inequality_join(spark, sf001_dir):
     assert a == b and len(a) > 0
     # bucketing must not duplicate a match even when an interval spans bins
     assert len(a) == len(set(a))
-
-
-def test_near_dup_lsh_recall(spark, sf001_dir):
-    e = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.cosine_near_dup_pairs(e, threshold=0.40).collect()
-    }
-    assert exact, "threshold should yield a non-empty exact pair set"
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.cosine_near_dup_lsh(e, threshold=0.40, dim=64, nbits=2).collect()
-    }
-    # every LSH pair is verified exact (precision 1.0); recall modest on
-    # cluster-free random vectors
-    assert approx <= exact
-    assert len(approx & exact) / len(exact) >= 0.2
-
-
-def test_ivf_ann_recall_vs_bruteforce(spark, sf001_dir):
-    e = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact_sets = {}
-    for r in SIM.cosine_topk_bruteforce(e, q, k=5).collect():
-        exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    approx_sets = {}
-    for r in SIM.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=8).collect():
-        approx_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact_sets[qid] & approx_sets.get(qid, set())) / 5 for qid in exact_sets
-    ]
-    # probing half the lists on structure-free vectors: expect ~0.5+
-    assert sum(recalls) / len(recalls) >= 0.4
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
@@ -400,31 +321,6 @@ def test_connected_components_round_count(spark):
     assert rounds <= 8, rounds
 
 
-def test_zero_vector_never_ranks_or_matches(spark):
-    """A zero-norm embedding yields NULL cosine (not NaN): Spark treats NaN
-    as greater than every double, so an unguarded zero vector would rank #1
-    for every query and flood near-dup output."""
-    from pii_detection_redaction_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_topk_bruteforce,
-    )
-
-    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = cosine_near_dup_pairs(df, threshold=0.5).collect()
-    assert all(2 not in (r["id_a"], r["id_b"]) for r in pairs)
-    assert pairs  # (0,1) is a real near-dup
-
-    q = df.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    top = cosine_topk_bruteforce(df, q, k=2).collect()
-    ranked = [r["vec_id"] for r in top]
-    assert ranked[0] == 1 and (2 not in ranked or ranked.index(2) > 0)
-    # the zero vector's cosine is NULL wherever it appears
-    assert all(r["cosine"] is not None or r["vec_id"] == 2 for r in top)
-
-
 def test_lsh_band_join_aqe_skew_split(spark):
     """Boilerplate-duplicate clusters are the canonical LSH hot key: every
     clone shares every band, so one (band_idx, band_hash) key holds the
@@ -483,58 +379,6 @@ def test_lsh_band_join_aqe_skew_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_near_dup_lsh_multi_seed_recall(spark, sf001_dir):
-    """OR-amplification (n_seeds knob): unioning independent hyperplane
-    seeds strictly raises near-dup recall on this corpus (measured
-    20/37/50 of 66 exact pairs at seeds=1/2/3, nbits=2) while precision
-    stays 1.0 — every candidate is exact-cosine verified."""
-    e = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in SIM.cosine_near_dup_pairs(e, threshold=0.40).collect()
-    }
-    recalls = []
-    for n_seeds in (1, 2, 3):
-        approx = {
-            (r["id_a"], r["id_b"])
-            for r in SIM.cosine_near_dup_lsh(
-                e, threshold=0.40, dim=64, nbits=2, n_seeds=n_seeds
-            ).collect()
-        }
-        assert approx <= exact  # precision 1.0 under every seed count
-        recalls.append(len(approx & exact))
-    assert recalls[0] < recalls[1] < recalls[2], recalls
-
-
-def test_resize_plan_geometry(spark):
-    """Aspect-fit resize geometry: never upscale, half-up rounding, 1px
-    floor, NULL targets for missing/non-positive source dims."""
-    from pii_detection_redaction_spark.operators.multimodal import resize_plan
-
-    rows = [
-        (1, 1024, 512),   # downscale 0.5 exactly
-        (2, 200, 100),    # fits already -> scale 1.0
-        (3, 10000, 10),   # extreme aspect: height floors at 1? (512/10000)
-        (4, None, 300),   # missing width
-        (5, 0, 300),      # degenerate
-    ]
-    df = spark.createDataFrame(rows, "media_id long, w int, h int").select(
-        "media_id",
-        F.struct(
-            F.lit("image").alias("media_type"),
-            F.col("w").alias("width"), F.col("h").alias("height"),
-            F.lit(None).cast("int").alias("n_frames"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
-    got = {r["media_id"]: r.asDict() for r in resize_plan(df).collect()}
-    assert (got[1]["target_w"], got[1]["target_h"]) == (512, 256)
-    assert (got[2]["target_w"], got[2]["target_h"], got[2]["resize_scale"]) == (200, 100, 1.0)
-    assert got[3]["target_w"] == 512 and got[3]["target_h"] == 1
-    for mid in (4, 5):
-        assert got[mid]["target_w"] is None and got[mid]["resize_scale"] is None
 
 
 def test_compression_stats_matches_spec(spark):
@@ -888,35 +732,6 @@ def test_token_shards_plan_single_payload_exchange(spark):
     assert "BroadcastExchange" in plan
 
 
-# --- semantic outlier filtering -----------------------------------------------
-
-
-def test_centroid_cosines_matches_numpy(spark):
-    import numpy as np
-
-    from pii_detection_redaction_spark.operators.similarity import centroid_cosines
-
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(40, 8).astype("float32")
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {r.vec_id: r.cos_centroid for r in centroid_cosines(df).collect()}
-    cen = vecs.astype("float64").mean(axis=0)
-    for i in range(40):
-        v = vecs[i].astype("float64")
-        want = float(v @ cen / (np.linalg.norm(v) * np.linalg.norm(cen)))
-        assert abs(got[i] - want) < 1e-9, i
-
-
-def test_centroid_cosines_zero_vector_is_null(spark):
-    from pii_detection_redaction_spark.operators.similarity import centroid_cosines
-
-    rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 2.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {r.vec_id: r.cos_centroid for r in centroid_cosines(df).collect()}
-    assert got[1] is None and got[0] is not None
-
-
 def test_redaction_plan_matches_python_spec(spark):
     """operators.layout's JVM columns reproduce core.layout.plan_row exactly
     (one spec, three engines — the DuckDB side is the catalog oracle),
@@ -1152,30 +967,6 @@ def test_streaming_quality_prob_and_boilerplate_contract(
     assert stream_vals == want and len(stream_vals) == 500
 
 
-def test_quadratic_arms_guarded_by_row_bounds(spark):
-    """The O(n²) / O(n·q) correctness baselines must fail loudly above
-    their row bounds (with a pointer to the LSH/IVF scale path) instead of
-    launching a quadratic job; explicit bound=None disables."""
-    import pytest as _pytest
-
-    from pii_detection_redaction_spark.operators import similarity as SIM
-
-    rows = [(i, [float(i), 1.0]) for i in range(8)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="cosine_near_dup_lsh"):
-        SIM.cosine_near_dup_pairs(df, threshold=0.5, max_rows=5)
-    q = df.select(F.col("vec_id").alias("query_id"), "embedding")
-    with _pytest.raises(ValueError, match="cosine_topk_ivf"):
-        SIM.cosine_topk_bruteforce(df, q, k=2, max_queries=5)
-    # at/under the bound and with bound disabled, both still run
-    assert SIM.cosine_near_dup_pairs(df, threshold=0.0, max_rows=8).count() > 0
-    assert (
-        SIM.cosine_near_dup_pairs(df.limit(3), threshold=0.0, max_rows=None)
-        .count() > 0
-    )
-    assert SIM.cosine_topk_bruteforce(df, q.limit(5), k=2, max_queries=5).count() > 0
-
-
 def test_token_shards_null_counts_fail_loudly(spark):
     """NULL n_tokens would make its doc's shard NULL silently (F.sum skips
     NULLs, later docs still pack) — an unassigned training document with
@@ -1270,39 +1061,6 @@ def test_bin_range_join_rejects_shared_column_names(spark):
     ivs = spark.createDataFrame([(0.0, 2.0, "y")], "lo double, hi double, name string")
     with _pytest.raises(ValueError, match="exist on both sides"):
         bin_range_join(pts, ivs, "v", "lo", "hi", 1.0)
-
-
-def test_event_transitions_keep_null_user_group(spark):
-    """NULL user_id events are one Spark group; their transitions must not
-    vanish through pandas groupby's dropna on group keys (the DuckDB
-    oracle's PARTITION BY keeps the NULL partition)."""
-    import datetime as _dt
-
-    from pii_detection_redaction_spark.operators.events import (
-        event_transitions,
-        transition_matrix,
-    )
-
-    t0 = _dt.datetime(2024, 1, 1)
-    rows = [
-        (None, t0, 1, "view"),
-        (None, t0 + _dt.timedelta(minutes=1), 2, "cart"),
-        (7, t0, 3, "view"),
-        (7, t0 + _dt.timedelta(minutes=2), 4, "buy"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    trans = event_transitions(ev).collect()
-    null_rows = [r for r in trans if r["user_id"] is None]
-    assert [(r["from_type"], r["to_type"], r["n"]) for r in null_rows] == [
-        ("view", "cart", 1)
-    ]
-    mat = {
-        (r["from_type"], r["to_type"]): r["n"]
-        for r in transition_matrix(ev).collect()
-    }
-    assert mat == {("view", "cart"): 1, ("view", "buy"): 1}
 
 
 def test_unpivot_handles_backslash_headers(spark):

@@ -124,3 +124,27 @@ def test_save_redacted_pdfs_streams_and_caps(spark, tmp_path):
     # half-written out_dir masquerading as a complete run, no temp dir
     assert not (tmp_path / "pdfs2").exists()
     assert not (tmp_path / "pdfs2.tmp-partial").exists()
+
+
+def test_save_redacted_pdfs_colliding_urls_keep_both(spark, tmp_path):
+    """Urls that sanitize to one file name (``/`` and ``?`` both map to
+    ``_``) must not overwrite each other: every row lands in its own file
+    and the returned count is what is on disk."""
+    import os
+
+    urls = ["http://a.com/x", "http://a.com?x"]
+    pages = spark.createDataFrame(
+        [(u, "a@b.co\n") for u in urls], ["url", "text"]
+    )
+    d = spark.createDataFrame(
+        [(u, "EMAIL_ADDRESS", 0, 6, 0.85) for u in urls],
+        "url string, entity_type string, start int, end int, score double",
+    )
+    rendered = render_redacted_pdfs(redaction_plan(spark, d, pages), pages)
+    out = str(tmp_path / "pdfs")
+    n = save_redacted_pdfs(rendered, out)
+    assert n == len(urls) == len(os.listdir(out))
+    assert sorted(os.listdir(out)) == [
+        "http___a.com_x.pdf",
+        "http___a.com_x_2.pdf",
+    ]
