@@ -33,7 +33,10 @@ def main() -> None:
                    help="input format: parquet pages table, .warc(.gz) dir, or .jsonl(.gz) dir")
     p.add_argument("--output", required=True, help="snapshot-store root")
     p.add_argument("--buckets", type=int, default=64, help="url-hash buckets")
-    p.add_argument("--groups", type=int, default=4, help="commit units per run")
+    p.add_argument("--groups", type=int, default=4,
+                   help="commit units (one manifest each); a run writes all "
+                        "pending groups in one job, a resume only the "
+                        "uncommitted ones")
     p.add_argument("--scrub-mode", default="relationship",
                    choices=["relationship", "replace", "mask"])
     p.add_argument("--min-score", type=float, default=0.0)

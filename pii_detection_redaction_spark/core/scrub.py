@@ -25,6 +25,7 @@ unscrubbed. Fixtures pin this choice.
 
 from __future__ import annotations
 
+from bisect import bisect_left, insort
 from typing import List, Sequence
 
 from .relationships import mask_with_relationships
@@ -38,11 +39,19 @@ def select_nonoverlapping(results: Sequence[Detection]) -> List[Detection]:
         results, key=lambda d: (-d.score, d.start, d.end, d.entity_type)
     )
     accepted: List[Detection] = []
+    # accepted (start, end) pairs in sorted order. Accepted spans never
+    # overlap, so their ends ascend with their starts: a candidate overlaps
+    # some accepted span iff the last one starting before its end reaches
+    # past its start — one bisect instead of a scan of every accepted span.
+    bounds: List[tuple] = []
     for d in ordered:
         # score-first greedy (presidio _remove_conflicts semantics): a span
         # is dropped only when a HIGHER-priority span overlaps it
-        if all(not (d.start < a.end and a.start < d.end) for a in accepted):
-            accepted.append(d)
+        i = bisect_left(bounds, (d.end,))
+        if i and bounds[i - 1][1] > d.start:
+            continue
+        insort(bounds, (d.start, d.end))
+        accepted.append(d)
     accepted.sort(key=lambda d: d.start)
     return accepted
 

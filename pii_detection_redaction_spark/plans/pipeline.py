@@ -2,10 +2,10 @@
 
 Spark-first assembly of the reference's text pipeline (entry point B,
 ``text_detector/cli.py`` → SURVEY.md §3.2) extended with the north-rule
-quality-filter stages. The plan is one narrow pipeline per bucket group —
-parquet scan (column-pruned) → codegen'd quality expressions → Arrow UDFs →
-write — with shuffles only at the explicit url-hash repartition and the
-metrics aggregation.
+quality-filter stages. A run is ONE narrow Spark job over every pending
+bucket group — parquet scan (column-pruned) → codegen'd quality expressions
+→ Arrow UDFs → write partitioned on the group — with shuffles only at the
+url-hash repartition of a partial-wave scan and the metrics aggregation.
 
 Scale design:
 - url-hash bucketing: ``bucket = pmod(xxhash64(url), num_buckets)`` spreads
@@ -15,18 +15,21 @@ Scale design:
   ``groupBy(host, salt)`` then final ``groupBy(host)`` — a Zipf host holding
   40% of rows is split across SALT_BUCKETS reducers first;
 - counters use ``df.observe`` (no extra pass over the data);
-- checkpoint-resume: bucket groups are the commit unit (sources.snapshots);
+- checkpoint-resume: bucket groups are the commit unit (sources.snapshots),
+  committed one manifest per group after the run's single write job. A
+  driver lost mid-run loses that run's uncommitted groups (task and
+  executor loss are covered by Spark's task retry); resume skips every
+  committed group and rewrites only the rest;
 - optional CC-Net-style boilerplate stage (``strip_boilerplate``): one
   JVM-only corpus pass builds the cross-group hot-line set, broadcast into
-  every group; the strip itself is a row-local higher-order filter in the
+  the write job; the strip itself is a row-local higher-order filter in the
   same stage as extraction (document text never shuffles for it).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +48,9 @@ SALT_BUCKETS = 16
 @dataclass
 class PipelineConfig:
     num_buckets: int = 64
-    groups: int = 4  # commit units (bucket groups) per full run
+    # commit units (bucket groups): one manifest each, all written by one
+    # job per run; a resume rewrites only the uncommitted groups
+    groups: int = 4
     entities: Optional[Sequence[str]] = None
     min_score: float = 0.0
     chunk_size: int = 5000
@@ -88,7 +93,7 @@ def _extracted_text(df: DataFrame, cfg: PipelineConfig):
 def boilerplate_hot_lines(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Corpus-level hot-line set over the EXTRACTED text of the whole input
     (cross-group by construction — boilerplate is a corpus property, so this
-    is a separate lightweight pass before the bucket-group loop: JVM-only
+    is a separate lightweight pass before the write job: JVM-only
     scan + one narrow (line, url) shuffle; CC-Net pays the same second pass).
     Single-row frame with the hot lines collected into an array, built for
     ``F.broadcast`` + higher-order filter. Derivation and strip semantics
@@ -270,6 +275,42 @@ def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def pending_output(
+    raw: DataFrame,
+    cfg: PipelineConfig,
+    pending: Sequence[int],
+    parallelism: int,
+    hot_arr: Optional[DataFrame] = None,
+) -> DataFrame:
+    """The output rows of every ``pending`` bucket group as ONE frame:
+    ``OUTPUT_COLUMNS`` (+ ``quality_prob``) plus the ``group`` column the
+    write partitions on.
+
+    Shuffle rule: the heavy Arrow-UDF stage must not quantize into partial
+    waves (measured: a 9-partition scan on 8 cores = 2 waves with 7 cores
+    idle in wave 2 — it silently cost ~25% of the round-1 scaling
+    efficiency, because Spark's file bin-packing produces as few as
+    defaultParallelism+1 partitions for a many-small-files corpus). A scan
+    that fills whole waves, or already has >= 2 tasks/core, runs as is (the
+    exchange serializes html+text through the shuffle: measured ~7s for
+    50k docs); otherwise repartition to ``num_buckets`` on ``bucket``
+    (size num_buckets >= 2 * cores: the exchange cannot fill more
+    partitions than there are buckets).
+    Callers who can size the scan itself should prefer
+    spark.sql.files.maxPartitionBytes ~= input_bytes / (4 * cores)
+    (shuffle-free — what bench.py does)."""
+    pages = with_bucket(raw, cfg)
+    if len(pending) < cfg.groups:
+        pages = pages.filter(F.col("grp").isin(list(pending)))
+    scan_parts = raw.rdd.getNumPartitions()
+    if scan_parts % parallelism and scan_parts < 2 * parallelism:
+        pages = pages.repartition(cfg.num_buckets, "bucket")
+    if hot_arr is not None:
+        pages = pages.crossJoin(F.broadcast(hot_arr))
+    out_cols = OUTPUT_COLUMNS + (["quality_prob"] if cfg.quality_classifier else [])
+    return transform_pages(pages, cfg).select(*out_cols, F.col("grp").alias("group"))
+
+
 def run_pipeline(
     spark: SparkSession,
     pages_path: str,
@@ -278,10 +319,17 @@ def run_pipeline(
     resume: bool = True,
     input_format: str = "parquet",
 ) -> Dict[str, int]:
-    """Batch run with snapshot commits per bucket group; resumable.
+    """Batch run with one snapshot commit per bucket group; resumable.
     ``input_format='warc'`` ingests Common-Crawl-layout .warc(.gz) files
     via sources.warc (same downstream plan: the reader emits the pages
     schema, html payloads born in their scan task).
+
+    Every pending group runs in ONE Spark job: one scan, one plan, one
+    write partitioned on the group with dynamic partition overwrite (only
+    the pending ``group=<gid>`` directories are replaced). After the job,
+    each pending group commits its own manifest, in gid order. A group
+    that received no rows has no directory and commits zero counters with
+    no data path, so a later resume skips it.
 
     Returns the accumulated counters across all snapshots (including any from
     prior partial runs when resuming).
@@ -289,7 +337,7 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     if cfg.quality_model is not None and not cfg.quality_classifier:
         # keep the config self-consistent here too (transform_pages also
-        # normalizes): the output-column selection below keys on the flag
+        # normalizes): the output-column selection keys on the flag
         from dataclasses import replace
 
         cfg = replace(cfg, quality_classifier=True)
@@ -306,6 +354,9 @@ def run_pipeline(
             f"snapshots — reprocessing would double-commit every group; "
             f"use a fresh out_root (or delete the store) to rebuild"
         )
+    pending = [gid for gid in range(cfg.groups) if gid not in done]
+    if not pending:
+        return store.counters()
 
     if input_format == "warc":
         from ..sources.warc import read_warc
@@ -323,68 +374,47 @@ def run_pipeline(
         raw = spark.read.parquet(pages_path)
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
-    pages = with_bucket(raw, cfg)
-    # The heavy Arrow-UDF stage needs >= ~2 tasks/core or the run quantizes
-    # into partial waves (measured: a 9-partition scan on 8 cores = 2 waves
-    # with 7 cores idle in wave 2 — it silently cost ~25% of the round-1
-    # scaling efficiency, because Spark's file bin-packing produces as few
-    # as defaultParallelism+1 partitions for a many-small-files corpus).
-    # If the scan's natural split is already fine-grained, skip the exchange
-    # (measured ~7s for 50k docs: row serialization of html+text through the
-    # shuffle); repartition only when the scan is coarser than 2 tasks/core.
-    # Callers who can size the scan itself should prefer
-    # spark.sql.files.maxPartitionBytes ~= input_bytes / (4 * cores)
-    # (shuffle-free — what bench.py does).
-    # n_parts stays <= buckets-per-group (the repartition keys on "bucket",
-    # which cannot yield more non-empty partitions than distinct buckets);
-    # size num_buckets >= groups * 2 * cores for full parallelism.
-    scan_parts = raw.rdd.getNumPartitions()
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, cfg.num_buckets // cfg.groups)
-    need_repartition = scan_parts < min(n_parts, 2 * par)
-
-    # corpus-level hot-line set: ONE pass over the whole input (not per
-    # group), reused by every group via broadcast. localCheckpoint pins the
-    # result so the groups don't recompute the scan+agg lineage.
+    # corpus-level hot-line set: ONE pass over the whole input (all groups,
+    # committed ones included), broadcast into the job. localCheckpoint
+    # pins the result so the write does not recompute the scan+agg lineage.
     hot_arr = None
     if cfg.strip_boilerplate:
         hot_arr = boilerplate_hot_lines(raw, cfg).localCheckpoint()
-
-    for gid in range(cfg.groups):
-        if gid in done:
-            continue
-        obs = Observation(f"grp-{gid}")
-        part = pages.filter(F.col("grp") == gid)
-        if need_repartition:
-            part = part.repartition(n_parts, "bucket")
-        if hot_arr is not None:
-            part = part.crossJoin(F.broadcast(hot_arr))
-        out_cols = OUTPUT_COLUMNS + (
-            ["quality_prob"] if cfg.quality_classifier else []
-        )
-        out = transform_pages(part, cfg).select(*out_cols)
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("docs_seen"),
-            F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-            F.sum("n_entities_scrubbed").alias("entities_scrubbed"),
-            F.sum((~F.col("extract_ok")).cast("long")).alias("extract_mismatch"),
-            # tox_masked = lexicon hits in the RAW text of kept docs — an
-            # upper bound on tokens actually replaced by <TOXIC>, since a hit
-            # inside a detected PII span is removed by the scrub before
-            # masking. Counting post-scrub would need a second regexp pass
-            # over every kept doc; the bound is documented instead.
-            F.sum(F.when(F.col("keep"), F.col("tox_hits")).otherwise(F.lit(0)))
-            .alias("tox_masked"),
-            F.sum("boiler_removed").alias("lines_removed"),
-        )
-        gpath = store.group_path(gid)
-        # already partitioned by bucket upstream → one file per bucket task;
-        # mode=overwrite keeps retries idempotent.
-        out.write.mode("overwrite").parquet(gpath)
-        counters = {k: int(v or 0) for k, v in obs.get.items()}
+    out = pending_output(
+        raw, cfg, pending, spark.sparkContext.defaultParallelism, hot_arr
+    )
+    # per-group commit counters: each is a per-row contribution, summed over
+    # the group's rows by the job's one Observation
+    counter_cols = {
+        "docs_seen": F.lit(1),
+        "docs_kept": F.col("keep").cast("long"),
+        "entities_scrubbed": F.col("n_entities_scrubbed"),
+        "extract_mismatch": (~F.col("extract_ok")).cast("long"),
+        # tox_masked = lexicon hits in the RAW text of kept docs — an upper
+        # bound on tokens actually replaced by <TOXIC>, since a hit inside a
+        # detected PII span is removed by the scrub before masking. Counting
+        # post-scrub would need a second regexp pass over every kept doc;
+        # the bound is documented instead.
+        "tox_masked": F.when(F.col("keep"), F.col("tox_hits")).otherwise(F.lit(0)),
+        "lines_removed": F.col("boiler_removed"),
+    }
+    obs = Observation("groups")
+    out = out.observe(obs, *[
+        F.sum(F.when(F.col("group") == gid, col)).alias(f"{name}_g{gid}")
+        for gid in pending
+        for name, col in counter_cols.items()
+    ])
+    # mode=overwrite + dynamic partition overwrite: only the group=<gid>
+    # directories this job writes are replaced (a crashed run's orphans
+    # included); committed groups are untouched, so retries are idempotent.
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("group").parquet(store.data_dir)
+    totals = obs.get
+    for gid in pending:
+        counters = {name: int(totals[f"{name}_g{gid}"] or 0) for name in counter_cols}
         counters["docs_dropped"] = counters["docs_seen"] - counters["docs_kept"]
-        store.commit([gid], [gpath], counters)
+        paths = [store.group_path(gid)] if counters["docs_seen"] else []
+        store.commit([gid], paths, counters)
 
     return store.counters()
 
@@ -397,5 +427,6 @@ def read_output(
     store = SnapshotStore(out_root)
     paths = store.data_paths(as_of)
     if not paths:
-        raise FileNotFoundError(f"no committed snapshots under {out_root}")
+        # no live snapshot, or only groups that received no rows
+        raise FileNotFoundError(f"no committed data under {out_root}")
     return spark.read.parquet(*paths)

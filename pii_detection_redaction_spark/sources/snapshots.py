@@ -15,9 +15,14 @@ a manifest that makes them visible):
 - readers see exactly the union of data paths listed in manifests — an
   uncommitted/partially-written group directory is invisible;
 - resume = recompute the input's bucket-group partition, anti-filter the
-  groups already present in manifests, process only the rest. Re-running a
-  failed group overwrites its directory before the manifest publish, so the
-  pipeline is idempotent (exactly-once per group).
+  groups already present in manifests, process only the rest. A run writes
+  all of its pending groups in one job (dynamic partition overwrite:
+  exactly the pending ``group=<gid>`` directories are replaced) and then
+  publishes one manifest per group, so a driver lost mid-run loses every
+  group that run had not yet published; the resume rewrites those
+  directories before their manifests publish, so the pipeline is
+  idempotent (exactly-once per group). A pending group that received no
+  rows commits with zero counters and no data path.
 
 On a real cluster the same class works unchanged on any shared filesystem
 with atomic link/rename (HDFS, NFS); for S3-class stores swap the link for
@@ -52,8 +57,9 @@ class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         self.snap_dir = os.path.join(root, "_snapshots")
+        self.data_dir = os.path.join(root, "data")
         os.makedirs(self.snap_dir, exist_ok=True)
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
+        os.makedirs(self.data_dir, exist_ok=True)
 
     # -- reading ----------------------------------------------------------
     def snapshots(self) -> List[Snapshot]:
@@ -121,7 +127,7 @@ class SnapshotStore:
         ]
 
     def group_path(self, gid: int) -> str:
-        return os.path.join(self.root, "data", f"group={gid}")
+        return os.path.join(self.data_dir, f"group={gid}")
 
     # -- committing -------------------------------------------------------
     def commit(
@@ -234,9 +240,10 @@ class SnapshotStore:
         return removed
 
     def remove_orphans(self, min_age_s: float = 3600.0) -> List[str]:
-        """Delete data/group=* directories no live manifest references
-        (Iceberg remove_orphan_files analog): the leftovers of a run that
-        crashed after writing a group but before publishing its manifest.
+        """Delete data/ directories no live manifest references (Iceberg
+        remove_orphan_files analog): the leftovers of a run that crashed
+        after writing a group but before publishing its manifest, and the
+        ``.spark-staging-*`` directory of a write job lost mid-flight.
         ``min_age_s`` guards against deleting an IN-FLIGHT writer's
         directory — only dirs whose newest file is older than the window
         are collected (Iceberg's older_than, same rationale). Returns the
@@ -253,11 +260,10 @@ class SnapshotStore:
         live = {
             os.path.basename(os.path.normpath(p)) for p in self.data_paths()
         }
-        data_dir = os.path.join(self.root, "data")
         removed = []
         now = time.time()
-        for name in sorted(os.listdir(data_dir)):
-            path = os.path.join(data_dir, name)
+        for name in sorted(os.listdir(self.data_dir)):
+            path = os.path.join(self.data_dir, name)
             if not os.path.isdir(path) or name in live:
                 continue
             newest = max(

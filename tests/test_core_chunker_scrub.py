@@ -103,6 +103,41 @@ def test_select_nonoverlapping_prefers_higher_score_then_earlier():
     assert [d.entity_type for d in select_nonoverlapping(ds3)] == ["B"]
 
 
+def _select_nonoverlapping_quadratic(results):
+    # the original all-pairs form of the score-first greedy: the reference
+    # the bisect version must reproduce exactly
+    ordered = sorted(results, key=lambda d: (-d.score, d.start, d.end, d.entity_type))
+    accepted = []
+    for d in ordered:
+        if all(not (d.start < a.end and a.start < d.end) for a in accepted):
+            accepted.append(d)
+    accepted.sort(key=lambda d: d.start)
+    return accepted
+
+
+def test_select_nonoverlapping_matches_quadratic_greedy():
+    """Seeded random span sets — score ties, equal starts, equal spans under
+    different types, zero-length spans — select the same spans in the same
+    order as the all-pairs greedy."""
+    import random
+
+    rng = random.Random(20261017)
+    for _ in range(3000):
+        n = rng.randint(0, 25)
+        width = rng.choice([5, 20, 80])
+        ds = []
+        for _ in range(n):
+            start = rng.randint(0, width)
+            end = start + rng.choice([0, 0, 1, 2, rng.randint(0, width // 2 + 1)])
+            ds.append(Detection(
+                rng.choice("ABC"), start, end, rng.choice([0.3, 0.5, 0.5, 0.9]),
+                pattern_name=str(len(ds)),
+            ))
+        got = select_nonoverlapping(ds)
+        want = _select_nonoverlapping_quadratic(ds)
+        assert [d.as_tuple() for d in got] == [d.as_tuple() for d in want], ds
+
+
 def test_relationship_masking_full_composition():
     text = (
         "Hello James Walker, see attached.\n"

@@ -1,0 +1,175 @@
+"""run_pipeline writes every pending bucket group in one Spark job: the plan
+shape of the shuffle rule, the job count, per-group commits after a crash
+between commits, and groups that receive no rows."""
+
+import os
+import re
+
+import pytest
+
+from pii_detection_redaction_spark.plans.pipeline import (
+    PipelineConfig,
+    pending_output,
+    read_output,
+    run_pipeline,
+)
+from pii_detection_redaction_spark.sources.snapshots import SnapshotStore
+from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
+
+CFG = PipelineConfig(num_buckets=16, groups=4)
+
+
+def _pages_files(tmp_path, name, n_docs, n_files):
+    return write_pages_parquet(str(tmp_path / name), n_docs, n_files=n_files)
+
+
+@pytest.fixture
+def one_file_per_partition(spark):
+    """Each input file is its own scan partition (no small-file packing), so
+    a test picks the scan's partition count with the number of files."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    yield
+    spark.conf.set(key, old)
+
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched): job ids are sequential, so
+    the count is the rise of the newest id the status store has seen."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest():
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    before = newest()
+    result = fn()
+    return result, newest() - before
+
+
+def _sorted_rows(spark, out):
+    return sorted(
+        (r.asDict(recursive=True) for r in read_output(spark, out).collect()),
+        key=lambda r: r["url"],
+    )
+
+
+def _files(path):
+    return {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
+
+
+def test_shuffle_only_for_partial_waves(spark, tmp_path, one_file_per_partition):
+    """A scan that fills whole waves is written as is; a par+1 scan (one
+    task in a second wave) gets one url-hash Exchange."""
+    par = spark.sparkContext.defaultParallelism
+    for n_files, want in ((par, 0), (par + 1, 1)):
+        raw = spark.read.parquet(_pages_files(tmp_path, f"p{n_files}", 120, n_files))
+        assert raw.rdd.getNumPartitions() == n_files
+        out = pending_output(raw, CFG, range(CFG.groups), par)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"Exchange hashpartitioning\(bucket", plan)) == want, plan
+        assert "BroadcastExchange" not in plan
+
+
+def test_one_write_job_per_run(spark, tmp_path, one_file_per_partition):
+    """Every pending group is written by one job whatever ``groups`` is; a
+    resume with every group committed launches none."""
+    src = _pages_files(tmp_path, "pages", 120, spark.sparkContext.defaultParallelism)
+    # the input's schema inference is the only other job of a run
+    _, read_jobs = _count_jobs(spark, lambda: spark.read.parquet(src).schema)
+    for groups in (1, 4):
+        out = str(tmp_path / f"out{groups}")
+        cfg = PipelineConfig(num_buckets=16, groups=groups)
+        counters, n_jobs = _count_jobs(spark, lambda: run_pipeline(spark, src, out, cfg))
+        assert counters["docs_seen"] == 120
+        assert n_jobs == read_jobs + 1
+        store = SnapshotStore(out)
+        assert store.committed_groups() == set(range(groups))
+        # every part file carries the one write job's id
+        job_ids = {
+            re.match(r"part-\d+-([0-9a-f-]{36})", f).group(1)
+            for p in store.data_paths()
+            for f in os.listdir(p)
+            if f.startswith("part-")
+        }
+        assert len(job_ids) == 1, job_ids
+        resumed, n_jobs = _count_jobs(spark, lambda: run_pipeline(spark, src, out, cfg))
+        assert resumed == counters
+        assert n_jobs == 0
+
+
+def test_crash_between_commits_resumes_uncommitted_groups(spark, tmp_path, monkeypatch):
+    src = _pages_files(tmp_path, "pages", 120, 2)
+    clean = str(tmp_path / "clean")
+    want_counters = run_pipeline(spark, src, clean, CFG)
+
+    out = str(tmp_path / "out")
+    real_commit = SnapshotStore.commit
+
+    def commit_once(self, group_ids, *args, **kwargs):
+        if self.snapshots():
+            raise RuntimeError("driver lost after the first commit")
+        return real_commit(self, group_ids, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit_once)
+    with pytest.raises(RuntimeError, match="driver lost"):
+        run_pipeline(spark, src, out, CFG)
+    monkeypatch.undo()
+
+    store = SnapshotStore(out)
+    assert store.committed_groups() == {0}
+    committed = _files(store.group_path(0))
+    # the job wrote every group; 1..3 are orphans until a resume commits them
+    orphans = {g: _files(store.group_path(g)) for g in (1, 2, 3)}
+    assert all(orphans.values())
+
+    assert run_pipeline(spark, src, out, CFG) == want_counters
+    assert _files(store.group_path(0)) == committed
+    for g, before in orphans.items():
+        after = _files(store.group_path(g))
+        # dynamic overwrite replaced the orphan directory's files
+        assert after and not set(after) & set(before), g
+    assert [s.group_ids for s in store.snapshots()] == [[0], [1], [2], [3]]
+    clean_counters = [s.counters for s in SnapshotStore(clean).snapshots()]
+    assert [s.counters for s in store.snapshots()] == clean_counters
+    assert _sorted_rows(spark, out) == _sorted_rows(spark, clean)
+
+    # a driver lost mid-job leaves the write's staging directory behind
+    staging = os.path.join(store.data_dir, ".spark-staging-lost-job")
+    os.makedirs(os.path.join(staging, "group=2"))
+    with open(os.path.join(staging, "group=2", "part-0.parquet"), "w") as f:
+        f.write("partial")
+    assert store.remove_orphans(min_age_s=0.0) == [staging]
+    assert _sorted_rows(spark, out) == _sorted_rows(spark, clean)
+
+
+def test_empty_groups_commit_zero_counters(spark, tmp_path):
+    """3 docs over 4 groups: a group with no rows gets no directory but
+    still commits (zero counters, no data path), so a resume writes
+    nothing; read_output has the schema of a run with no empty group."""
+    src = write_pages_parquet(str(tmp_path / "pages3.parquet"), 3)
+    out = str(tmp_path / "out")
+    counters = run_pipeline(spark, src, out, CFG)
+    assert counters["docs_seen"] == 3
+
+    store = SnapshotStore(out)
+    assert store.committed_groups() == {0, 1, 2, 3}
+    empty = [s for s in store.snapshots() if s.counters["docs_seen"] == 0]
+    assert empty
+    for s in empty:
+        assert s.data_paths == []
+        assert set(s.counters.values()) == {0}
+        assert list(s.counters) == list(store.snapshots()[0].counters)
+        assert not os.path.exists(store.group_path(s.group_ids[0]))
+
+    resumed, n_jobs = _count_jobs(spark, lambda: run_pipeline(spark, src, out, CFG))
+    assert resumed == counters
+    assert n_jobs == 0
+
+    one = str(tmp_path / "one_group")
+    run_pipeline(spark, src, one, PipelineConfig(num_buckets=16, groups=1))
+    assert read_output(spark, out).schema == read_output(spark, one).schema
+    assert _sorted_rows(spark, out) == _sorted_rows(spark, one)
