@@ -114,6 +114,8 @@ def render_page_ppm(text: str) -> bytes:
 
 
 def _decode_bmp(data: bytes) -> Tuple[int, int, bytes]:
+    if len(data) < 34:
+        raise ValueError("truncated BMP header")
     magic, _size, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
     if magic != b"BM":
         raise ValueError("not a BMP")
@@ -124,6 +126,9 @@ def _decode_bmp(data: bytes) -> Tuple[int, int, bytes]:
     flipped = h > 0
     h = abs(h)
     row_len = (w * 3 + 3) & ~3
+    if w < 0 or off + row_len * h > len(data):
+        raise ValueError(f"truncated BMP raster ({w}x{h} needs "
+                         f"{off + row_len * h} bytes, got {len(data)})")
     px = bytearray(w * h)
     for y in range(h):
         src = h - 1 - y if flipped else y
@@ -154,6 +159,10 @@ def _decode_ppm(data: bytes) -> Tuple[int, int, bytes]:
             pos += 1
         if pos == start:
             raise ValueError("truncated PPM header")
+        if not data[start:pos].isdigit():
+            raise ValueError(f"PPM header field {bytes(data[start:pos])!r} is "
+                             f"not a decimal number (a '#' comment must follow "
+                             f"whitespace, and none may follow maxval)")
         vals.append(int(data[start:pos]))
     w, h, maxval = vals
     if maxval != 255:

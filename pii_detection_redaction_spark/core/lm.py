@@ -292,6 +292,21 @@ def all_models() -> Dict[str, CharTrigramLM]:
     return dict(_MODELS)
 
 
+def perplexity_many(texts, langs, models: Dict[str, CharTrigramLM]) -> np.ndarray:
+    """Batch path: ``texts[i]`` scored under ``models[langs[i]]`` (unknown
+    or NULL languages score against ``models["en"]``), one
+    ``perplexity_batch`` call per language present — bit-identical to the
+    per-doc ``perplexity``."""
+    by_lang: Dict[str, List[int]] = {}
+    for i, lang in enumerate(langs):
+        by_lang.setdefault(lang, []).append(i)
+    out = np.empty(len(texts), dtype=np.float64)
+    for lang, idx in by_lang.items():
+        out[idx] = models.get(lang, models["en"]).perplexity_batch(
+            [texts[i] for i in idx])
+    return out
+
+
 def perplexity(text: str, lang: str = "en") -> float:
     """Oracle path: perplexity of ``text`` under the LM for ``lang``
     (unknown languages score against the English LM)."""

@@ -95,7 +95,9 @@ def redaction_stream(plan_rows: Sequence[Dict], draw_labels: bool = True,
                                 text_rgb))
             ops.append(label_op(row["label_x"], row["conf_y"],
                                 row["conf_text"], BLACK))
-    return "".join(ops).encode("ascii")
+    # latin-1 with '?' for the rest, like base_text_stream: the label
+    # prefix and a custom bank's entity types are user text
+    return "".join(ops).encode("latin-1", errors="replace")
 
 
 def base_text_stream(text: str) -> bytes:

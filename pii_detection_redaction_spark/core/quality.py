@@ -23,6 +23,8 @@ from __future__ import annotations
 import re
 from typing import Dict, List, Tuple
 
+import numpy as np
+
 from .casefold import NONSPACE_RUN, ascii_ci_expand
 from .langprofiles import CHAR_BASED_LANGS
 from .toxicity import MAX_TOXICITY_HITS, TOXICITY_REGEX_CI
@@ -105,24 +107,55 @@ def text_metrics(text: str) -> Dict[str, float]:
     }
 
 
+def rule_flags_batch(metrics, lang) -> Dict[str, np.ndarray]:
+    """True = rule passes: one bool array per ``RULE_NAMES`` entry.
+
+    ``metrics`` maps the ``text_metrics`` fields to per-document arrays (a
+    dict, or the frame of JVM-computed metric columns); ``lang`` holds each
+    document's (predicted) language. NULL and ``und`` take the word-based
+    branches and pass the English-only stopword rule — the same as
+    ``functions.quality.rule_flag_columns``."""
+    lang = np.asarray(lang, dtype=object)
+    ws_lang = ~np.isin(lang, list(CHAR_BASED_LANGS))
+    n_words = np.asarray(metrics["n_words"])
+    mwl = np.asarray(metrics["mean_word_len"])
+    return {
+        "min_words": np.where(ws_lang, n_words >= MIN_WORDS,
+                              np.asarray(metrics["n_chars"]) >= MIN_WORDS),
+        "max_words": n_words <= MAX_WORDS,
+        "mean_word_len": ~ws_lang
+        | ((mwl >= MIN_MEAN_WORD_LEN) & (mwl <= MAX_MEAN_WORD_LEN)),
+        "symbol_ratio": np.asarray(metrics["symbol_ratio"]) <= MAX_SYMBOL_RATIO,
+        "stopwords": (lang != "en")
+        | (np.asarray(metrics["stop_hits"]) >= MIN_STOPWORD_HITS),
+        "dup_lines": np.asarray(metrics["dup_line_frac"]) <= MAX_DUP_LINE_FRAC,
+        "ellipsis_lines": np.asarray(metrics["ellipsis_line_frac"])
+        <= MAX_ELLIPSIS_LINE_FRAC,
+        "toxicity": np.asarray(metrics["tox_hits"]) <= MAX_TOXICITY_HITS,
+    }
+
+
+def drop_reasons_batch(flags: Dict[str, np.ndarray], lang_conf, ppl) -> List[List[str]]:
+    """Per-document drop reasons (empty = keep): the failed rules in
+    ``RULE_NAMES`` order, then ``lang_conf``, then ``perplexity``."""
+    gates = [(name, flags[name]) for name in RULE_NAMES]
+    gates += [("lang_conf", np.asarray(lang_conf) >= MIN_LANG_CONF),
+              ("perplexity", np.asarray(ppl) <= MAX_PERPLEXITY)]
+    reasons: List[List[str]] = [[] for _ in range(len(gates[0][1]))]
+    for name, passed in gates:
+        for i in np.flatnonzero(~passed):
+            reasons[i].append(name)
+    return reasons
+
+
+def _metrics_of_one(text: str) -> Dict[str, list]:
+    return {k: [v] for k, v in text_metrics(text).items()}
+
+
 def rule_flags(text: str, lang: str) -> Dict[str, bool]:
     """True = rule passes. ``lang`` is the document's (predicted) language."""
-    m = text_metrics(text)
-    ws_lang = lang not in CHAR_BASED_LANGS
-    return {
-        "min_words": (m["n_words"] >= MIN_WORDS) if ws_lang else (m["n_chars"] >= MIN_WORDS),
-        "max_words": m["n_words"] <= MAX_WORDS,
-        "mean_word_len": (
-            MIN_MEAN_WORD_LEN <= m["mean_word_len"] <= MAX_MEAN_WORD_LEN
-            if ws_lang
-            else True
-        ),
-        "symbol_ratio": m["symbol_ratio"] <= MAX_SYMBOL_RATIO,
-        "stopwords": (lang != "en") or (m["stop_hits"] >= MIN_STOPWORD_HITS),
-        "dup_lines": m["dup_line_frac"] <= MAX_DUP_LINE_FRAC,
-        "ellipsis_lines": m["ellipsis_line_frac"] <= MAX_ELLIPSIS_LINE_FRAC,
-        "toxicity": m["tox_hits"] <= MAX_TOXICITY_HITS,
-    }
+    flags = rule_flags_batch(_metrics_of_one(text), [lang])
+    return {name: bool(arr[0]) for name, arr in flags.items()}
 
 
 def quality_decision(
@@ -133,12 +166,8 @@ def quality_decision(
     Returns (keep, drop_reasons) — reasons empty when keep (per-rule lineage,
     FIXTURES.md §4).
     """
-    flags = rule_flags(text, lang)
-    reasons = [name for name in RULE_NAMES if not flags[name]]
-    if lang_conf < MIN_LANG_CONF:
-        reasons.append("lang_conf")
-    if ppl > MAX_PERPLEXITY:
-        reasons.append("perplexity")
+    flags = rule_flags_batch(_metrics_of_one(text), [lang])
+    reasons = drop_reasons_batch(flags, [lang_conf], [ppl])[0]
     return (not reasons), reasons
 
 

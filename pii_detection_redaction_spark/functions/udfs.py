@@ -87,18 +87,29 @@ def make_detect_udf(
 
     @pandas_udf(DETECTIONS_TYPE)
     def detect_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if not t:
-                out.append([])
-                continue
-            dets = _chunker.analyze_long_text(
-                t, size=size, overlap=overlap, min_score=min_score, entities=ent
-            )
-            out.append([d.as_tuple() for d in dets])
-        return pd.Series(out)
+        dets = detect_batch(texts.to_numpy(), ent, min_score, size, overlap)
+        return pd.Series([[d.as_tuple() for d in ds] for ds in dets])
 
     return detect_udf
+
+
+def detect_batch(texts, entities, min_score, size, overlap) -> List[List[Detection]]:
+    """The detect stage: per-document detections, ``[]`` for empty/NULL
+    text. One ``core.scanvec`` candidate scan covers the non-empty docs that
+    fit ONE chunk — ``analyze_long_text``'s multi-chunk branch ignores the
+    bundle (chunk-local offsets don't line up with document-level
+    candidates), so scanning a long doc would be pure waste. A
+    lone-surrogate batch (``batch_scan`` -> None) falls back to per-doc
+    scans."""
+    short = [i for i, t in enumerate(texts) if t and len(t) <= size]
+    bundles = _scanvec.batch_scan([texts[i] for i in short]) or [None] * len(short)
+    scans = dict(zip(short, bundles))
+    return [
+        _chunker.analyze_long_text(t, size=size, overlap=overlap, min_score=min_score,
+                                   entities=entities, scans=scans.get(i))
+        if t else []
+        for i, t in enumerate(texts)
+    ]
 
 
 def _coerce_detections(dets) -> List[Detection]:
@@ -234,16 +245,11 @@ def make_ftlang_udf(spark=None):
     the golden parquet bit-for-bit."""
     from ..core import ftlang as _ftlang
 
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    bc = spark.sparkContext.broadcast(_ftlang.model()) if spark else None
+    get_model = _shipped(_ftlang.model(), spark)
 
     @pandas_udf(FTLANG_TYPE)
     def ftlang_udf(texts: pd.Series) -> pd.DataFrame:
-        m = bc.value if bc is not None else _ftlang.model()
-        preds = _ftlang.predict_many(texts.fillna("").to_numpy(), m)
+        preds = _ftlang.predict_many(texts.fillna("").to_numpy(), get_model())
         return pd.DataFrame(
             {"lang": [p[0] for p in preds], "prob": [p[1] for p in preds]}
         )
@@ -285,71 +291,49 @@ def make_ftquality_udf(spark=None, W=None):
     artifact) instead of the embedded seed model."""
     from ..core import ftquality as _ftq
 
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    model = _ftq.model() if W is None else _validated_quality_matrix(W, "W")
-    bc = spark.sparkContext.broadcast(model) if spark else None
-    # the closure must NOT capture the matrix when a broadcast exists —
-    # cloudpickle would ship the ~2 MB ndarray inside the UDF command and
-    # re-unpickle it per task, defeating the broadcast it sits next to
-    model_local = None if bc is not None else model
+    get_W = _shipped(_ftq.model() if W is None else _validated_quality_matrix(W, "W"),
+                     spark)
 
     @pandas_udf("double")
     def ftquality_udf(texts: pd.Series) -> pd.Series:
-        WW = bc.value if bc is not None else model_local
-        return pd.Series(_ftq.predict_quality_many(texts.fillna("").to_numpy(), WW))
+        return pd.Series(_ftq.predict_quality_many(texts.fillna("").to_numpy(), get_W()))
 
     return ftquality_udf
 
 
-def _ship_models(spark=None):
-    """Train the LMs once on the driver and ship them by broadcast when a
-    session is live (closure fallback otherwise, for unit contexts).
+def _shipped(value, spark=None):
+    """Zero-arg getter for a driver-built model inside a UDF: shipped once
+    by ``SparkContext.broadcast`` when a session is live, riding the closure
+    otherwise (unit contexts).
 
-    Broadcast is not just bandwidth hygiene: a closure-shipped model dict is
-    re-unpickled for EVERY task, so the per-instance dense n-gram caches
-    (``CharTrigramLM._dense_tables``, deliberately excluded from pickle)
-    were rebuilt per task — measured ~23 ms/task of Python-eval setup, the
-    dominant level-invariant cost at fine task granularity. The worker-side
-    broadcast registry caches the deserialized value per PROCESS, so the
-    dense tables now build once per worker and persist across tasks.
-    Returns (models_bc, models_local) — exactly one is non-None."""
-    models = _lm.all_models()  # driver-side, once per factory call
+    With a broadcast the getter captures ONLY the handle. A closure-captured
+    model rides inside the pickled UDF command and is re-unpickled for EVERY
+    task: for the LMs that rebuilt the per-instance dense n-gram caches
+    (``CharTrigramLM._dense_tables``, deliberately excluded from pickle) per
+    task — measured ~23 ms/task of Python-eval setup — and for the ~2 MB
+    quality matrix it defeats the broadcast it sits next to. The worker-side
+    broadcast registry caches the deserialized value per PROCESS."""
     if spark is None:
         from pyspark.sql import SparkSession
 
         spark = SparkSession.getActiveSession()
-    if spark is not None:
-        return spark.sparkContext.broadcast(models), None
-    return None, models
+    if spark is None:
+        return lambda: value
+    bc = spark.sparkContext.broadcast(value)
+    return lambda: bc.value
 
 
 def make_perplexity_udf():
     """(text, lang) -> double. The LMs are trained once on the driver and
-    broadcast (``_ship_models``), so executor workers do zero training —
+    broadcast (``_shipped``), so executor workers do zero training —
     measured to remove a ~1s-per-worker-per-language first-task stall.
-    Scoring batches group by lang; the math is numpy."""
-    models_bc, models_local = _ship_models()
+    Scoring batches group by lang (``core.lm.perplexity_many``)."""
+    get_models = _shipped(_lm.all_models())
 
     @pandas_udf(T.DoubleType())
     def ppl_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-        models = models_bc.value if models_bc is not None else models_local
-        fallback = models["en"]
-        out = np.empty(len(texts), dtype=np.float64)
-        frame = pd.DataFrame(
-            {"t": texts.fillna("").to_numpy(), "l": langs.fillna("und").to_numpy()}
-        )
-        for lang, grp in frame.groupby("l", sort=False):
-            model = models.get(lang, fallback)
-            # batched dense-table lookups (bit-identical to per-doc
-            # perplexity — test_perplexity_batch_bitwise), same path the
-            # fused pipeline UDF uses
-            out[grp.index.to_numpy()] = model.perplexity_batch(
-                grp["t"].to_numpy()
-            )
-        return pd.Series(out)
+        return pd.Series(_lm.perplexity_many(
+            texts.fillna("").to_numpy(), langs.to_numpy(), get_models()))
 
     return ppl_udf
 
@@ -372,8 +356,8 @@ QUALITY_SCRUB_TYPE = T.StructType(
 
 # metric fields the fused UDF needs for the lang-dependent rule flags — the
 # METRICS are computed JVM-side (functions.quality.quality_metric_columns);
-# only the scalar threshold comparisons happen here, vectorized in numpy,
-# because the flags depend on the language PREDICTION the UDF itself makes.
+# only the threshold comparisons (core.quality.rule_flags_batch) run in the
+# UDF, because the flags depend on the language PREDICTION it makes.
 QUALITY_METRIC_FIELDS = (
     "n_chars", "n_words", "mean_word_len", "symbol_ratio", "stop_hits",
     "dup_line_frac", "ellipsis_line_frac", "tox_hits",
@@ -391,143 +375,52 @@ def make_quality_scrub_udf(
 ):
     """Single fused Python stage for the whole pipeline:
     (text, metrics_struct) -> (lang, conf, ppl, drop_reasons, detections,
-    scrubbed_text).
+    scrubbed_text, q_prob).
 
     The JVM still owns the heavy quality METRICS (regexp counts, line dedup —
-    whole-stage-codegen'd); this UDF computes langid+perplexity, evaluates
-    the rule FLAGS with numpy comparisons that mirror
-    ``core.quality.rule_flags`` exactly (they need the language prediction,
-    which is made here), builds the drop_reasons lineage, and runs
-    detect+scrub only for docs passing every gate. Identical semantics to
-    the former two-stage formulation, but the document text crosses the
-    Arrow boundary ONCE instead of twice and the JVM no longer materializes
-    a gated third copy — measured to improve throughput AND parallel
-    efficiency on this bandwidth-limited host."""
+    whole-stage-codegen'd); this UDF is a straight sequence of the shared
+    batch stages: ``langid_batch`` → ``core.lm.perplexity_many`` →
+    ``core.quality.rule_flags_batch`` / ``drop_reasons_batch`` (the flags
+    need the language prediction, which is made here) → ``detect_batch`` and
+    ``scrub_document`` on the kept docs → optional ``q_prob``. The document
+    text crosses the Arrow boundary ONCE and the JVM never materializes a
+    gated copy — measured to improve throughput AND parallel efficiency over
+    the former two-stage formulation on this bandwidth-limited host.
+    ``quality_model`` is a custom-trained quality matrix (run_train.py /
+    operators.train) scored instead of the embedded seed model."""
+    from ..core import ftquality as _ftq
     from ..core import quality as _q
-    from ..core.toxicity import MAX_TOXICITY_HITS as _MAX_TOX
 
-    models_bc, models_local = _ship_models()
+    get_models = _shipped(_lm.all_models())
     ent = list(entities) if entities else None
-
-    # optional fused quality classifier: train once driver-side (or take a
-    # custom-trained ``quality_model`` matrix — the run_train.py /
-    # operators.train loop), ship by broadcast when a session is live
-    # (factory may be called without one in unit contexts — then the 2 MB
-    # matrix rides the closure, LM-style)
-    qprob_bc = None
-    qprob_W = None
+    get_qW = None
     if quality_prob:
-        from pyspark.sql import SparkSession
-
-        from ..core import ftquality as _ftq
-
-        W = (
-            _validated_quality_matrix(quality_model, "quality_model")
-            if quality_model is not None
-            else _ftq.model()
-        )
-        sess = SparkSession.getActiveSession()
-        if sess is not None:
-            qprob_bc = sess.sparkContext.broadcast(W)
-        else:
-            qprob_W = W
+        get_qW = _shipped(
+            _ftq.model() if quality_model is None
+            else _validated_quality_matrix(quality_model, "quality_model"))
 
     @pandas_udf(QUALITY_SCRUB_TYPE)
     def quality_scrub_udf(texts: pd.Series, m: pd.DataFrame) -> pd.DataFrame:
-        models = models_bc.value if models_bc is not None else models_local
-        fallback = models["en"]
+        t_arr = texts.fillna("").to_numpy()
         lid = langid_batch(texts)
-        lang = lid["lang"].to_numpy()
-        ppl = np.empty(len(texts), dtype=np.float64)
-        frame = pd.DataFrame({"t": texts.fillna("").to_numpy(), "l": lang})
-        for lg, grp in frame.groupby("l", sort=False):
-            model = models.get(lg, fallback)
-            # batched lookups (5 searchsorted per language-group instead of
-            # 5 per doc) — bit-identical to per-doc scoring, see
-            # CharTrigramLM.perplexity_batch
-            ppl[grp.index.to_numpy()] = model.perplexity_batch(
-                grp["t"].to_numpy()
-            )
-
-        # rule flags — exact numpy mirror of core.quality.rule_flags
-        ws = ~np.isin(lang, list(_q.CHAR_BASED_LANGS))
-        n_words = m["n_words"].to_numpy()
-        n_chars = m["n_chars"].to_numpy()
-        mwl = m["mean_word_len"].to_numpy()
-        flags = {
-            "min_words": np.where(ws, n_words >= _q.MIN_WORDS,
-                                  n_chars >= _q.MIN_WORDS),
-            "max_words": n_words <= _q.MAX_WORDS,
-            "mean_word_len": np.where(
-                ws, (mwl >= _q.MIN_MEAN_WORD_LEN) & (mwl <= _q.MAX_MEAN_WORD_LEN),
-                True),
-            "symbol_ratio": m["symbol_ratio"].to_numpy() <= _q.MAX_SYMBOL_RATIO,
-            "stopwords": (lang != "en")
-            | (m["stop_hits"].to_numpy() >= _q.MIN_STOPWORD_HITS),
-            "dup_lines": m["dup_line_frac"].to_numpy() <= _q.MAX_DUP_LINE_FRAC,
-            "ellipsis_lines": m["ellipsis_line_frac"].to_numpy()
-            <= _q.MAX_ELLIPSIS_LINE_FRAC,
-            "toxicity": m["tox_hits"].to_numpy() <= _MAX_TOX,
-        }
-        gate_conf = lid["conf"].to_numpy() >= _q.MIN_LANG_CONF
-        gate_ppl = ppl <= _q.MAX_PERPLEXITY
-        ordered = [(name, flags[name]) for name in _q.RULE_NAMES]
-        ordered += [("lang_conf", gate_conf), ("perplexity", gate_ppl)]
-        keep = np.ones(len(texts), dtype=bool)
-        for _, arr in ordered:
-            keep &= arr
-
-        dets_out: list = []
-        scrub_out: list = []
-        reasons_out: list = []
-        t_arr = frame["t"].to_numpy()
-        # batch candidate scans (core.scanvec) for the kept docs only — the
-        # detect stage never sees dropped docs, so don't pay the scan for
-        # them — and only for docs that fit ONE chunk: analyze_long_text's
-        # multi-chunk branch ignores the bundle (chunk-local offsets don't
-        # line up with document-level candidates), so scanning a long doc
-        # is O(doc chars) of pure waste exactly where chars dominate.
-        # None (lone-surrogate batch) falls back to per-doc scans.
-        kept_idx = np.array(
-            [i for i in np.nonzero(keep)[0] if len(t_arr[i] or "") <= size],
-            dtype=np.int64,
-        )
-        bundles = _scanvec.batch_scan([t_arr[i] for i in kept_idx])
-        if bundles is None:
-            bundles = [None] * len(kept_idx)
-        bundle_at = dict(zip(kept_idx.tolist(), bundles))
-        for i in range(len(texts)):
-            if keep[i]:
-                reasons_out.append([])
-            else:
-                reasons_out.append(
-                    [name for name, arr in ordered if not arr[i]]
-                )
-            if not keep[i] or not t_arr[i]:
-                dets_out.append([])
-                scrub_out.append(None)
-                continue
-            dets = _chunker.analyze_long_text(
-                t_arr[i], size=size, overlap=overlap, min_score=min_score,
-                entities=ent, scans=bundle_at.get(i),
-            )
-            dets_out.append([d.as_tuple() for d in dets])
-            scrub_out.append(_scrub.scrub_document(t_arr[i], dets, mode=mode))
-        if quality_prob:
-            from ..core import ftquality as _ftq
-
-            W = qprob_bc.value if qprob_bc is not None else qprob_W
-            q_prob = _ftq.predict_quality_many(t_arr, W)
-        else:
-            q_prob = [None] * len(texts)
+        ppl = _lm.perplexity_many(t_arr, lid["lang"].to_numpy(), get_models())
+        reasons = _q.drop_reasons_batch(
+            _q.rule_flags_batch(m, lid["lang"]), lid["conf"], ppl)
+        kept = [t if not r else "" for t, r in zip(t_arr, reasons)]
+        dets = detect_batch(kept, ent, min_score, size, overlap)
+        q_prob = (_ftq.predict_quality_many(t_arr, get_qW()) if quality_prob
+                  else [None] * len(texts))
         return pd.DataFrame(
             {
                 "lang": lid["lang"],
                 "conf": lid["conf"],
                 "ppl": ppl,
-                "drop_reasons": reasons_out,
-                "detections": dets_out,
-                "scrubbed_text": scrub_out,
+                "drop_reasons": reasons,
+                "detections": [[d.as_tuple() for d in ds] for ds in dets],
+                "scrubbed_text": [
+                    _scrub.scrub_document(t, ds, mode=mode) if t else None
+                    for t, ds in zip(kept, dets)
+                ],
                 "q_prob": pd.Series(q_prob, dtype="float64"),
             }
         )

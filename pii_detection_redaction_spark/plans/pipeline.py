@@ -28,7 +28,7 @@ Scale design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -56,8 +56,6 @@ class PipelineConfig:
     chunk_size: int = 5000
     chunk_overlap: int = 300
     scrub_mode: str = "relationship"
-    extract_from_html: bool = True
-    salt_buckets: int = SALT_BUCKETS
     # CC-Net-style corpus-level boilerplate-line stripping BEFORE the quality
     # rules (off by default: the frozen keep/drop spec + pinned counters are
     # defined on unstripped text; enabling changes what the rules see).
@@ -73,7 +71,12 @@ class PipelineConfig:
     # with that matrix instead of the embedded seed model (implies
     # quality_classifier) — the train-on-cluster -> filter-with-it loop
     quality_model: Optional[str] = None
-    extra: Dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        # a supplied model implies the annotation (the output-column
+        # selection keys on quality_classifier)
+        if self.quality_model is not None:
+            self.quality_classifier = True
 
 
 def with_bucket(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -82,10 +85,10 @@ def with_bucket(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ).withColumn("grp", (F.col("bucket") % cfg.groups).cast("int"))
 
 
-def _extracted_text(df: DataFrame, cfg: PipelineConfig):
+def _extracted_text(df: DataFrame):
     """The canonical text column expression for a raw pages frame — the same
     extraction transform_pages applies (JVM, byte-identical invariant)."""
-    if cfg.extract_from_html and "html" in df.columns:
+    if "html" in df.columns:
         return extract_text_expr(F.col("html"))
     return F.col("text")
 
@@ -102,7 +105,7 @@ def boilerplate_hot_lines(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     return boilerplate_hot_array(
         boilerplate_hot_set(
-            df, id_col="url", text=_extracted_text(df, cfg),
+            df, id_col="url", text=_extracted_text(df),
             min_docs=cfg.boilerplate_min_docs,
         )
     )
@@ -127,8 +130,6 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """
     q_W = None
     if cfg.quality_model is not None:
-        from dataclasses import replace
-
         from ..operators.train import load_model
 
         kind, q_W = load_model(cfg.quality_model)
@@ -137,9 +138,6 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 f"quality_model must be a 'quality' run_train artifact, "
                 f"got kind={kind!r} from {cfg.quality_model!r}"
             )
-        # a supplied model implies the annotation (downstream column
-        # selection keys on quality_classifier)
-        cfg = replace(cfg, quality_classifier=True)
     quality_scrub_udf = make_quality_scrub_udf(
         entities=cfg.entities,
         min_score=cfg.min_score,
@@ -150,7 +148,7 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         quality_model=q_W,
     )
 
-    if cfg.extract_from_html and "html" in df.columns:
+    if "html" in df.columns:
         # byte-identical per-url extraction invariant: extracted text IS the
         # canonical text downstream; extract_ok lineage flags divergence from
         # any pre-existing text column. JVM-side inverse of the page
@@ -245,7 +243,7 @@ def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per-host lineage counters via salted two-stage aggregation.
 
     Stage 1 shuffles on (host, salt) — skewed hosts split across
-    ``salt_buckets`` reducers; stage 2 reduces ``hosts x salt`` pre-aggregated
+    ``SALT_BUCKETS`` reducers; stage 2 reduces ``hosts x salt`` pre-aggregated
     rows, which is tiny. Deterministic salt = pmod(xxhash64(url), S).
     Host definition is the ONE shared ``operators.web.host_col`` (a slashless
     url like https://a.example.com must roll up under its authority, not '').
@@ -253,7 +251,7 @@ def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     from ..operators.web import host_col
 
     host = host_col("url").alias("host")
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.salt_buckets)).alias("salt")
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS)).alias("salt")
     partial = (
         df.select(host, salt, "keep", "n_entities_scrubbed")
         .groupBy("host", "salt")
@@ -335,12 +333,6 @@ def run_pipeline(
     prior partial runs when resuming).
     """
     cfg = cfg or PipelineConfig()
-    if cfg.quality_model is not None and not cfg.quality_classifier:
-        # keep the config self-consistent here too (transform_pages also
-        # normalizes): the output-column selection keys on the flag
-        from dataclasses import replace
-
-        cfg = replace(cfg, quality_classifier=True)
     store = SnapshotStore(out_root)
     done = store.committed_groups() if resume else set()
     if not resume and store.committed_groups():

@@ -358,3 +358,64 @@ def test_charset_evidence_is_language_exclusive():
     assert L.detect_language("le garçon était ailleurs ça s'île flûte œuvre")[0] == "fr"
     got = L.detect_language("análise do relatório histórico e económico")
     assert got[0] in ("pt", "und") and got != ("es", 1.0)
+
+
+def test_rule_flags_threshold_edges_agree_across_engines(spark):
+    """The JVM ``rule_flag_columns`` and the Python ``rule_flags_batch``
+    (the fused UDF's and the oracle's one spelling) agree on hand-built
+    metric rows at every threshold and one ulp (one unit for counts) on
+    each side, for word-based, char-based, ``und`` and NULL languages."""
+    import math
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from pii_detection_redaction_spark.core import quality as Q
+    from pii_detection_redaction_spark.core.toxicity import MAX_TOXICITY_HITS
+    from pii_detection_redaction_spark.functions.quality import rule_flag_columns
+
+    def around(x):
+        if isinstance(x, int):
+            return [x - 1, x, x + 1]
+        return [math.nextafter(x, -math.inf), x, math.nextafter(x, math.inf)]
+
+    base = {"n_chars": 1000, "n_words": 200, "mean_word_len": 5.0,
+            "symbol_ratio": 0.0, "stop_hits": 10, "dup_line_frac": 0.0,
+            "ellipsis_line_frac": 0.0, "tox_hits": 0}
+    edges = {
+        "n_chars": around(Q.MIN_WORDS),
+        "n_words": around(Q.MIN_WORDS) + around(Q.MAX_WORDS),
+        "mean_word_len": around(Q.MIN_MEAN_WORD_LEN) + around(Q.MAX_MEAN_WORD_LEN),
+        "symbol_ratio": around(Q.MAX_SYMBOL_RATIO),
+        "stop_hits": around(Q.MIN_STOPWORD_HITS),
+        "dup_line_frac": around(Q.MAX_DUP_LINE_FRAC),
+        "ellipsis_line_frac": around(Q.MAX_ELLIPSIS_LINE_FRAC),
+        "tox_hits": around(MAX_TOXICITY_HITS),
+    }
+    variants = [dict(base, **{k: v}) for k, vals in edges.items() for v in vals]
+    # both length rules at once: n_chars passes while n_words fails
+    variants.append(dict(base, n_words=Q.MIN_WORDS - 1, mean_word_len=50.0))
+    fields = list(base)
+    rows = [tuple(v[f] for f in fields) + (lang,)
+            for v in variants for lang in ("en", "de", "zh", "ja", "und", None)]
+    df = spark.createDataFrame(
+        rows,
+        "n_chars int, n_words int, mean_word_len double, symbol_ratio double, "
+        "stop_hits int, dup_line_frac double, ellipsis_line_frac double, "
+        "tox_hits int, lang string",
+    )
+    jvm_flags = rule_flag_columns({f: F.col(f) for f in fields}, F.col("lang"))
+    got = df.select(*[jvm_flags[n].alias(n) for n in Q.RULE_NAMES]).collect()
+    py = Q.rule_flags_batch(
+        {f: np.array([r[i] for r in rows]) for i, f in enumerate(fields)},
+        [r[-1] for r in rows],
+    )
+    for name in Q.RULE_NAMES:
+        jvm = [r[name] for r in got]
+        assert jvm == py[name].tolist(), name
+        assert set(jvm) == {True, False}, name  # every edge is exercised
+    # NULL and 'und' take the word-based branch (and skip stopwords)
+    for i, r in enumerate(rows):
+        if r[-1] in (None, "und"):
+            assert py["min_words"][i] == (r[1] >= Q.MIN_WORDS)
+            assert py["stopwords"][i]

@@ -119,3 +119,18 @@ def test_ftquality_udf_matches_core(spark):
     got = {r.url: r.p for r in sdf.select("url", fq("text").alias("p")).collect()}
     for _, r in df.iterrows():
         assert got[r.url] == predict_quality(r.text)  # bit-identical
+
+
+def test_broadcast_models_stay_out_of_the_udf_closure(spark):
+    """With a live session every model-shipping UDF pickles only broadcast
+    handles: a closure-captured model would ride inside the UDF command
+    and be re-unpickled for every task (the ~2 MB quality matrix, the
+    ~10 MB langid matrix, the LM dict)."""
+    from pyspark import cloudpickle
+
+    from pii_detection_redaction_spark.functions import udfs as U
+
+    for udf in (U.make_ftlang_udf(spark), U.make_ftquality_udf(spark),
+                U.make_perplexity_udf(),
+                U.make_quality_scrub_udf(quality_prob=True)):
+        assert len(cloudpickle.dumps(udf.func)) < 100_000, udf.func.__name__

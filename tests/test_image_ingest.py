@@ -121,3 +121,20 @@ def test_corrupt_glyph_degrades_to_replacement_not_raise():
     # exactly one cell degraded; everything else still reads back
     assert len(ot) == len("hello world")
     assert sum(a == b for a, b in zip(ot, "hello world")) == len(ot) - 1
+
+
+def test_truncated_bmp_raises_value_error():
+    """A cut-off BMP is a ValueError naming the truncation, never an
+    IndexError from the pixel loop or a struct.error from the header."""
+    data = IC.render_page_bmp("hello world")
+    for cut in (data[:-50], data[:60], data[:20]):
+        with pytest.raises(ValueError, match="truncated BMP"):
+            IC.decode_image(cut)
+
+
+def test_ppm_comment_after_maxval_raises_clear_error():
+    """A '#' glued to maxval leaves no single whitespace byte before the
+    raster: rejected with a message naming the bad header field."""
+    data = b"P6\n2 2\n255# comment\n" + bytes(12)
+    with pytest.raises(ValueError, match=r"PPM header field b'255#'"):
+        IC.decode_image(data)

@@ -17,16 +17,6 @@ from pii_detection_redaction_spark.operators.csvops import (
 )
 
 
-# Account-balance bands (half-open [lo, hi)) covering the TPC-H c_acctbal range.
-ACCTBAL_BANDS = [
-    ("neg", -1000.0, 0.0),
-    ("low", 0.0, 2500.0),
-    ("mid", 2500.0, 5000.0),
-    ("high", 5000.0, 7500.0),
-    ("top", 7500.0, 10000.0),
-]
-
-
 def _near_dup_corpus():
     """30 base docs + 10 near-dups (1 word changed) + 2 exact dups."""
     rng = random.Random(7)
@@ -159,149 +149,6 @@ def test_streaming_pipeline_drain(spark, pages_small, tmp_path):
     )
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == 500
-
-
-def test_asof_join_small_case(spark):
-    from pii_detection_redaction_spark.operators.joins import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (1, 5, "c"), (2, 7, "d"), (3, 9, "e")],
-        "k int, t int, tag string",
-    )
-    right = spark.createDataFrame(
-        [(1, 10, 100.0), (1, 15, 150.0), (2, 8, 80.0)],
-        "k int, rt int, v double",
-    )
-    out = {
-        r["tag"]: r["v"]
-        for r in asof_join(
-            left, right, key="k", left_ts="t", right_ts="rt", value_cols=["v"]
-        ).collect()
-    }
-    assert out == {
-        "a": 100.0,  # inclusive: rt == t matches
-        "b": 150.0,  # latest at-or-before
-        "c": None,   # nothing at-or-before
-        "d": None,   # right ts after left ts
-        "e": None,   # key absent on right
-    }
-
-
-def test_asof_join_tiebreak(spark):
-    from pii_detection_redaction_spark.operators.joins import asof_join
-
-    left = spark.createDataFrame([(1, 10)], "k int, t int")
-    right = spark.createDataFrame(
-        [(1, 10, 1, 1.0), (1, 10, 3, 3.0), (1, 10, 2, 2.0)],
-        "k int, rt int, eid int, v double",
-    )
-    out = asof_join(
-        left, right, key="k", left_ts="t", right_ts="rt",
-        value_cols=["v"], tiebreak="eid",
-    ).collect()
-    assert out[0]["v"] == 3.0  # greatest tiebreak wins
-
-
-def test_bin_range_join_equals_inequality_join(spark, sf001_dir):
-    from pii_detection_redaction_spark.operators.joins import bin_range_join
-
-    c = spark.read.parquet(f"{sf001_dir}/customer.parquet").select(
-        "c_custkey", "c_acctbal"
-    )
-    bands = spark.createDataFrame(ACCTBAL_BANDS, "band string, lo double, hi double")
-    binned = bin_range_join(c, bands, "c_acctbal", "lo", "hi", bin_size=500.0)
-    naive = c.join(
-        bands, (F.col("c_acctbal") >= F.col("lo")) & (F.col("c_acctbal") < F.col("hi"))
-    )
-    a = sorted((r["c_custkey"], r["band"]) for r in binned.collect())
-    b = sorted((r["c_custkey"], r["band"]) for r in naive.collect())
-    assert a == b and len(a) > 0
-    # bucketing must not duplicate a match even when an interval spans bins
-    assert len(a) == len(set(a))
-
-
-def test_asof_join_matches_pandas_merge_asof(spark):
-    """Seeded-random differential: asof_join == pandas.merge_asof (backward,
-    inclusive) on datasets with many keys, duplicate left timestamps, and
-    keys missing from either side."""
-    import random
-
-    import pandas as pd
-
-    from pii_detection_redaction_spark.operators.joins import asof_join
-
-    rng = random.Random(7)
-    for case in range(4):
-        left = pd.DataFrame(
-            {
-                "k": [rng.randint(0, 5) for _ in range(150)],
-                "t": [rng.randint(0, 60) for _ in range(150)],
-                "lid": list(range(150)),
-            }
-        )
-        right = (
-            pd.DataFrame(
-                {
-                    "k": [rng.randint(0, 6) for _ in range(150)],
-                    "rt": [rng.randint(0, 60) for _ in range(150)],
-                    "v": [round(rng.uniform(0, 100), 3) for _ in range(150)],
-                }
-            )
-            .drop_duplicates(["k", "rt"])  # unique (key, ts): no tie ambiguity
-            .reset_index(drop=True)
-        )
-        expected = pd.merge_asof(
-            left.sort_values(["t", "lid"]),
-            right.sort_values("rt"),
-            left_on="t",
-            right_on="rt",
-            by="k",
-            direction="backward",
-            allow_exact_matches=True,
-        )
-        exp = {
-            int(r.lid): (None if pd.isna(r.v) else float(r.v))
-            for r in expected.itertuples()
-        }
-        out = asof_join(
-            spark.createDataFrame(left),
-            spark.createDataFrame(right),
-            key="k",
-            left_ts="t",
-            right_ts="rt",
-            value_cols=["v"],
-        ).collect()
-        got = {int(r["lid"]): (None if r["v"] is None else float(r["v"])) for r in out}
-        assert got == exp, f"case {case}"
-
-
-def test_bin_range_join_overlapping_intervals_random(spark):
-    """Seeded-random differential incl. overlapping intervals, negative
-    coordinates, empty intervals, and bin-edge-aligned bounds."""
-    import random
-
-    from pii_detection_redaction_spark.operators.joins import bin_range_join
-
-    rng = random.Random(11)
-    pts = [(i, round(rng.uniform(-50, 50), 2)) for i in range(200)]
-    ivs = []
-    for j in range(40):
-        lo = round(rng.uniform(-55, 50), 2)
-        if j % 7 == 0:
-            lo = float(int(lo))  # exactly on a bin edge (bin_size divides it)
-        hi = lo if j % 11 == 0 else round(lo + rng.uniform(0, 30), 2)
-        ivs.append((j, lo, hi))
-    expected = sorted(
-        (pid, iid)
-        for pid, x in pts
-        for iid, lo, hi in ivs
-        if lo <= x < hi
-    )
-    p = spark.createDataFrame(pts, "pid int, x double")
-    iv = spark.createDataFrame(ivs, "iid int, lo double, hi double")
-    out = bin_range_join(p, iv, "x", "lo", "hi", bin_size=5.0)
-    got = sorted((r["pid"], r["iid"]) for r in out.collect())
-    assert got == expected and len(got) > 100
 
 
 def test_connected_components_round_count(spark):
@@ -1020,47 +867,6 @@ def test_extract_strips_nested_tags_inside_paragraphs(spark):
     df = spark.createDataFrame([(c,) for c in cases], "html binary")
     jvm = [r.t for r in df.select(extract_text_expr(F.col("html")).alias("t")).collect()]
     assert jvm == py
-
-
-def test_asof_join_sql_null_semantics(spark):
-    """Right rows with NULL key or NULL ts never match (SQL semantics) —
-    unguarded, Spark's nulls-first ordering makes a NULL-ts row an
-    infinitely-old match and NULL keys match NULL keys."""
-    from pii_detection_redaction_spark.operators.joins import asof_join
-
-    left = spark.createDataFrame(
-        [("u1", 100, "a"), (None, 100, "b")],
-        "user string, ts long, tag string",
-    )
-    right = spark.createDataFrame(
-        [("u1", None, 1.0), (None, 50, 2.0), ("u1", 40, 3.0)],
-        "user string, ts long, price double",
-    )
-    rows = {
-        r["tag"]: r["p"]
-        for r in asof_join(
-            left, right.withColumnRenamed("price", "p"),
-            key="user", left_ts="ts", right_ts="ts", value_cols=["p"],
-        ).collect()
-    }
-    assert rows["a"] == 3.0   # the real ts=40 row, never the NULL-ts one
-    assert rows["b"] is None  # NULL key matches nothing
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="collide with left columns"):
-        asof_join(left, right, key="user", left_ts="ts", right_ts="ts",
-                  value_cols=["tag"])
-
-
-def test_bin_range_join_rejects_shared_column_names(spark):
-    import pytest as _pytest
-
-    from pii_detection_redaction_spark.operators.joins import bin_range_join
-
-    pts = spark.createDataFrame([(1.0, "x")], "v double, name string")
-    ivs = spark.createDataFrame([(0.0, 2.0, "y")], "lo double, hi double, name string")
-    with _pytest.raises(ValueError, match="exist on both sides"):
-        bin_range_join(pts, ivs, "v", "lo", "hi", 1.0)
 
 
 def test_unpivot_handles_backslash_headers(spark):

@@ -148,3 +148,17 @@ def test_save_redacted_pdfs_colliding_urls_keep_both(spark, tmp_path):
         "http___a.com_x.pdf",
         "http___a.com_x_2.pdf",
     ]
+
+
+def test_redaction_stream_non_ascii_label_prefix():
+    """A user label prefix outside ASCII encodes like the base layer
+    (latin-1, '?' beyond it) instead of raising UnicodeEncodeError."""
+    row = {
+        "start": 0, "end": 4, "entity_type": "EMAIL_ADDRESS", "value": "a@b",
+        "fill_r": 0.0, "fill_g": 0.0, "fill_b": 0.0, "x0": 1.0, "y0": 2.0,
+        "rect_w": 3.0, "rect_h": 4.0, "label_white": True, "label_x": 5.0,
+        "label_y": 6.0, "conf_y": 7.0, "conf_text": "0.85",
+    }
+    out = PW.redaction_stream([row], label_prefix="PII: §→ ")
+    assert b"(PII: \xa7? EMAIL_ADDRESS) Tj" in out
+    assert PW.redaction_stream([row]).isascii()

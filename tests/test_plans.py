@@ -15,16 +15,6 @@ from pii_detection_redaction_spark.plans.pipeline import PipelineConfig, transfo
 from pii_detection_redaction_spark.plans.queries import q_severity_rollup
 
 
-# Account-balance bands (half-open [lo, hi)) covering the TPC-H c_acctbal range.
-ACCTBAL_BANDS = [
-    ("neg", -1000.0, 0.0),
-    ("low", 0.0, 2500.0),
-    ("mid", 2500.0, 5000.0),
-    ("high", 5000.0, 7500.0),
-    ("top", 7500.0, 10000.0),
-]
-
-
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -77,44 +67,6 @@ def test_pipeline_core_shuffle_free(spark, pages_small):
         out._jdf.queryExecution(), "simple"
     )
     assert simple.count("ArrowEvalPython") == 1, simple
-
-
-def test_asof_join_single_core_shuffle(spark, sf001_dir):
-    """The as-of operator itself costs exactly one Exchange (the window's
-    partitionBy(key)) — no nested-loop join, no range explosion."""
-    from pii_detection_redaction_spark.operators.joins import asof_join
-
-    ev = spark.read.parquet(f"{sf001_dir}/events.parquet")
-    left = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
-    right = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("ts").alias("vts"), F.col("value").alias("v")
-    )
-    out = asof_join(left, right, "user_id", "ts", "vts", ["v"])
-    # simple mode: one line per operator (formatted repeats names in details)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    assert plan.count("Exchange") == 1, plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_bin_range_join_is_hash_join(spark, sf001_dir):
-    """Bin bucketing turns point-in-interval into an equi-join — the plan
-    must contain a hash join on the bin id and no nested-loop join."""
-    from pii_detection_redaction_spark.operators.joins import bin_range_join
-
-    c = spark.read.parquet(f"{sf001_dir}/customer.parquet").select(
-        "c_custkey", "c_acctbal"
-    )
-    bands = spark.createDataFrame(ACCTBAL_BANDS, "band string, lo double, hi double")
-    out = bin_range_join(c, bands, "c_acctbal", "lo", "hi", bin_size=500.0)
-    plan = _plan(out)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "HashJoin" in plan, plan
 
 
 def test_sql_function_registration(spark, pages_small):
