@@ -24,8 +24,24 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+RENDERING_LIMITS = """\
+rendering limits:
+  one page per document: the page holds 60 text rows (US-Letter, 36pt
+    margins, 12pt lines); rows past 60 run into the bottom margin and then
+    off the page, where they are clipped; there is no pagination
+  the base text layer is latin-1: every character latin-1 cannot encode
+    is drawn as '?' (redaction boxes still cover the original spans)
+  the glyph OCR of the image surface (core.imagecodec) reads printable
+    ASCII only: any other character reads back as '?'
+"""
+
+
 def main() -> None:
-    p = argparse.ArgumentParser()
+    p = argparse.ArgumentParser(
+        description="Detect PII in pages and write one redacted PDF per page.",
+        epilog=RENDERING_LIMITS,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
     p.add_argument("--input", required=True, help="pages parquet (url, text)")
     p.add_argument("--output", required=True,
                    help="dir for .pdf files (or parquet path with --parquet)")

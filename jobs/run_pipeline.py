@@ -81,7 +81,7 @@ def main() -> None:
     )
     # per-host lineage table written beside the data
     out = read_output(spark, args.output)
-    host_metrics(out, cfg).write.mode("overwrite").parquet(
+    host_metrics(out).write.mode("overwrite").parquet(
         f"{args.output}/_metrics/host_metrics"
     )
     print(json.dumps(counters))

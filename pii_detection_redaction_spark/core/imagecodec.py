@@ -189,7 +189,12 @@ def ocr_from_image(data: bytes) -> Tuple[str, List[Tuple[str, int, int]]]:
     pattern, rebuild (ocr_text, [(word, cs, ce)]) — the exact shape (and,
     on the declared glyph set, the exact values) of ``core.ocr.ocr_words``
     on the original text."""
-    w, h, px = decode_image(data)
+    return ocr_pixels(*decode_image(data))
+
+
+def ocr_pixels(w: int, h: int, px: bytes) -> Tuple[str, List[Tuple[str, int, int]]]:
+    """Glyph classification over decoded pixels (``decode_image``'s
+    output): (ocr_text, [(word, cs, ce)])."""
     cols = (w - 2 * OCR_MARGIN_PX) // OCR_CHAR_PX
     lines = (h - 2 * OCR_MARGIN_PX) // OCR_LINE_PX
     chars: List[str] = []
@@ -232,4 +237,5 @@ __all__ = [
     "render_page_ppm",
     "decode_image",
     "ocr_from_image",
+    "ocr_pixels",
 ]

@@ -148,6 +148,19 @@ assert len(_CLASS_RES) <= 16  # bits must fit the uint16 LUT
 _LUT = None  # lazy: ~2.2 MB, built once per process (executor)
 
 
+def all_codepoints() -> str:
+    """Every codepoint except the surrogate gap, in order, as one string:
+    one utf-32 decode of a numpy codepoint range, ~15 ms against ~0.2 s for
+    a per-codepoint ``chr`` join. Every fresh Python worker builds both
+    class LUTs from it on its first fused batch."""
+    import numpy as np
+
+    cps = np.concatenate(
+        [np.arange(0xD800, dtype="<u4"), np.arange(0xE000, 0x110000, dtype="<u4")]
+    )
+    return cps.tobytes().decode("utf-32-le")
+
+
 def build_class_lut(bit_rx_pairs, dtype):
     """Codepoint→class-bitmask LUT: run each spec regex over the
     all-codepoints string (surrogate gap excluded), OR the given bit into
@@ -156,9 +169,7 @@ def build_class_lut(bit_rx_pairs, dtype):
     ``core.scanvec._class_lut``)."""
     import numpy as np
 
-    all_cp = "".join(map(chr, range(0xD800))) + "".join(
-        map(chr, range(0xE000, 0x110000))
-    )
+    all_cp = all_codepoints()
     lut = np.zeros(0x110000, dtype=dtype)
     for bit, rx in bit_rx_pairs:
         members = np.array([ord(ch) for ch in rx.findall(all_cp)], dtype=np.int64)

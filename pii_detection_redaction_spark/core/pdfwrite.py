@@ -32,9 +32,10 @@ same add-a-second-stream shape as the reference's ``page.contents_add``
 redactor.py:49-68), /F2 Courier for the base layer. Uncompressed streams +
 a classic xref table, so tests (and humans) can scan the bytes textually.
 
-Declared seams: the grid model is single-page — lines beyond row 60 fall
-below the media box and are clipped (the PLAN's y-coordinates are the
-spec; pagination would fork them); base-layer text is latin-1 with
+Declared seams: the grid model is single-page — lines beyond row 60 run
+into the bottom margin and then below the media box, where they are
+clipped (the PLAN's y-coordinates are the spec; pagination would fork
+them); base-layer text is latin-1 with
 non-encodable codepoints replaced by ``?`` (Type1 metrics; labels/conf
 are ASCII by construction).
 """

@@ -100,7 +100,9 @@ def _make_fused_detect_udf(kernel):
             ocr_texts.append(ot)
             words.append(ws)
             dets.append(
-                [
+                None
+                if ot is None
+                else [
                     (d.entity_type, d.start, d.end, d.score)
                     for d in (analyze_long_text(ot) if ot else [])
                 ]
@@ -125,11 +127,21 @@ def make_image_ocr_detect_udf():
     ``core.imagecodec.ocr_from_image`` (pure-Python pixel decode + glyph
     classification on the declared grid), closing the decode seam for the
     formats this environment can honestly decode. Everything downstream
-    (``image_redaction_boxes``) is shared and unchanged."""
-    from ..core.imagecodec import ocr_from_image
+    (``image_redaction_boxes``) is shared and unchanged. An image that does
+    not decode (truncated, unknown or unsupported format) costs its own row,
+    not the task: its ocr_text, words and detections are NULL — unread, which
+    a consumer can tell from a read image with no text (``""``, no
+    detections)."""
+    from ..core.imagecodec import decode_image, ocr_pixels
 
     def kernel(data):
-        return ocr_from_image(bytes(data)) if data is not None else ("", [])
+        if data is None:
+            return "", []
+        try:
+            pixels = decode_image(bytes(data))
+        except ValueError:
+            return None, None
+        return ocr_pixels(*pixels)
 
     return _make_fused_detect_udf(kernel)
 

@@ -5,7 +5,7 @@ Spark-first assembly of the reference's text pipeline (entry point B,
 quality-filter stages. A run is ONE narrow Spark job over every pending
 bucket group — parquet scan (column-pruned) → codegen'd quality expressions
 → Arrow UDFs → write partitioned on the group — with shuffles only at the
-url-hash repartition of a partial-wave scan and the metrics aggregation.
+repartition of a partial-wave scan and the metrics aggregation.
 
 Scale design:
 - url-hash bucketing: ``bucket = pmod(xxhash64(url), num_buckets)`` spreads
@@ -43,6 +43,10 @@ from ..functions.udfs import (
 from ..sources.snapshots import SnapshotStore
 
 SALT_BUCKETS = 16
+# Input bytes (pages parquet) a Python task should carry at the least: every
+# task pays a fixed worker setup (~0.2 s) before its first row, about a
+# tenth of the fused stage's one-core time over 2 MiB.
+TASK_MIN_BYTES = 2 << 20
 
 
 @dataclass
@@ -239,7 +243,7 @@ OUTPUT_COLUMNS = [
 ]
 
 
-def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def host_metrics(df: DataFrame) -> DataFrame:
     """Per-host lineage counters via salted two-stage aggregation.
 
     Stage 1 shuffles on (host, salt) — skewed hosts split across
@@ -273,6 +277,12 @@ def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def scan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` — the file bytes of a file
+    scan — read from its plan statistics, without a Spark job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def pending_output(
     raw: DataFrame,
     cfg: PipelineConfig,
@@ -291,10 +301,18 @@ def pending_output(
     defaultParallelism+1 partitions for a many-small-files corpus). A scan
     that fills whole waves, or already has >= 2 tasks/core, runs as is (the
     exchange serializes html+text through the shuffle: measured ~7s for
-    50k docs); otherwise repartition to ``num_buckets`` on ``bucket``
-    (size num_buckets >= 2 * cores: the exchange cannot fill more
-    partitions than there are buckets).
-    Callers who can size the scan itself should prefer
+    50k docs). Otherwise the scan's size picks the repartition, because
+    every Python task pays a fixed setup before its first row: a scan too
+    small to give each of ``num_buckets`` tasks ``TASK_MIN_BYTES`` runs as
+    one wave of ``parallelism`` tasks, range-partitioned on
+    ``(grp, url)`` — rows stay even, and each task holds a contiguous run
+    of groups, so the write leaves at most ``parallelism + groups - 1``
+    part files (a hash on ``url`` would leave one per task and group; a
+    hash of the few ``bucket`` values into few partitions is uneven). The
+    range bounds cost one sampling job over the scan's url column. A
+    larger scan goes to ``num_buckets`` partitions on ``bucket`` (>= 2
+    waves, so doc-length skew fills the tail, and each task holds few
+    groups). Callers who can size the scan itself should prefer
     spark.sql.files.maxPartitionBytes ~= input_bytes / (4 * cores)
     (shuffle-free — what bench.py does)."""
     pages = with_bucket(raw, cfg)
@@ -302,7 +320,10 @@ def pending_output(
         pages = pages.filter(F.col("grp").isin(list(pending)))
     scan_parts = raw.rdd.getNumPartitions()
     if scan_parts % parallelism and scan_parts < 2 * parallelism:
-        pages = pages.repartition(cfg.num_buckets, "bucket")
+        if scan_bytes(raw) < cfg.num_buckets * TASK_MIN_BYTES:
+            pages = pages.repartitionByRange(parallelism, "grp", "url")
+        else:
+            pages = pages.repartition(cfg.num_buckets, "bucket")
     if hot_arr is not None:
         pages = pages.crossJoin(F.broadcast(hot_arr))
     out_cols = OUTPUT_COLUMNS + (["quality_prob"] if cfg.quality_classifier else [])
@@ -324,10 +345,12 @@ def run_pipeline(
 
     Every pending group runs in ONE Spark job: one scan, one plan, one
     write partitioned on the group with dynamic partition overwrite (only
-    the pending ``group=<gid>`` directories are replaced). After the job,
-    each pending group commits its own manifest, in gid order. A group
-    that received no rows has no directory and commits zero counters with
-    no data path, so a later resume skips it.
+    the pending ``group=<gid>`` directories are replaced; a small
+    partial-wave scan adds one sampling job for its range bounds, see
+    ``pending_output``). After the job, each pending group commits its
+    own manifest, in gid order. A group that received no rows has no
+    directory and commits zero counters with no data path, so a later
+    resume skips it.
 
     Returns the accumulated counters across all snapshots (including any from
     prior partial runs when resuming).

@@ -265,6 +265,18 @@ def test_charclass_matrix_equals_regex_counts(sf001_dir):
         assert nonspace == len(L._nonspace_re.findall(text)), text[:80]
 
 
+def test_all_codepoints_is_every_scalar_value_in_order():
+    """The numpy-decoded string the class LUTs are built from holds every
+    codepoint but the surrogate gap, in order — the same string as the
+    per-codepoint ``chr`` join."""
+    from pii_detection_redaction_spark.core.langid import all_codepoints
+
+    want = "".join(map(chr, range(0xD800))) + "".join(
+        map(chr, range(0xE000, 0x110000))
+    )
+    assert all_codepoints() == want
+
+
 def test_perplexity_batch_bitwise():
     """perplexity_batch must return bit-for-bit what per-doc perplexity
     returns — the fused UDF scores with the batch path while the pure

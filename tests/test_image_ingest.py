@@ -92,6 +92,38 @@ def test_binary_path_boxes_equal_text_path(spark):
     assert any(r[1] == "EMAIL_ADDRESS" for r in a)
 
 
+def test_truncated_image_costs_one_row(spark):
+    """A frame holding a valid BMP, a blank page and a truncated BMP: the
+    job finishes; the truncated row is marked unread (NULL ocr_text, words
+    and detections), which tells it apart from the blank page (read: empty
+    text, no detections); the valid row is what it is alone."""
+    from pii_detection_redaction_spark.operators.ocr import make_image_ocr_detect_udf
+    from pyspark.sql import functions as F
+
+    good = IC.render_page_bmp("mail bob.smith@ex.com today")
+    imgs = spark.createDataFrame(
+        [
+            ("good", good),
+            ("blank", IC.render_page_bmp("")),
+            ("cut", IC.render_page_bmp("hello world")[:60]),
+        ],
+        "url string, image binary",
+    )
+    kb = make_image_ocr_detect_udf()
+    rows = {
+        r.url: r.k
+        for r in imgs.select("url", kb(F.col("image")).alias("k")).collect()
+    }
+    cut = rows["cut"]
+    assert cut.ocr_text is None and cut.words is None and cut.detections is None
+    blank = rows["blank"]
+    assert blank.ocr_text == "" and blank.words == [] and blank.detections == []
+    alone = spark.createDataFrame([("good", good)], "url string, image binary")
+    assert rows["good"] == alone.select(kb(F.col("image")).alias("k")).first().k
+    assert rows["good"].ocr_text == "mail bob.smith@ex.com today"
+    assert any(d.entity_type == "EMAIL_ADDRESS" for d in rows["good"].detections)
+
+
 def test_ppm_whitespace_valued_leading_pixels_decode_exactly():
     """The raster begins immediately after ONE whitespace byte following
     maxval; pixels whose VALUES are ASCII whitespace (9-13/32) at the

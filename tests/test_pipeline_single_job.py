@@ -2,16 +2,19 @@
 shape of the shuffle rule, the job count, per-group commits after a crash
 between commits, and groups that receive no rows."""
 
+import glob
 import os
 import re
 
 import pytest
 
+from pii_detection_redaction_spark.plans import pipeline as P
 from pii_detection_redaction_spark.plans.pipeline import (
     PipelineConfig,
     pending_output,
     read_output,
     run_pipeline,
+    scan_bytes,
 )
 from pii_detection_redaction_spark.sources.snapshots import SnapshotStore
 from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
@@ -61,17 +64,58 @@ def _files(path):
     return {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
 
 
-def test_shuffle_only_for_partial_waves(spark, tmp_path, one_file_per_partition):
-    """A scan that fills whole waves is written as is; a par+1 scan (one
-    task in a second wave) gets one url-hash Exchange."""
+def test_shuffle_only_for_partial_waves(
+    spark, tmp_path, one_file_per_partition, monkeypatch
+):
+    """A scan that fills whole waves is written as is. A par+1 scan (one
+    task in a second wave) gets one Exchange, sized by the scan's file
+    bytes: a scan too small to give every bucket ``TASK_MIN_BYTES`` is
+    range-partitioned on (grp, url) into one wave of par tasks, a larger
+    one hashed on bucket into num_buckets tasks."""
     par = spark.sparkContext.defaultParallelism
-    for n_files, want in ((par, 0), (par + 1, 1)):
-        raw = spark.read.parquet(_pages_files(tmp_path, f"p{n_files}", 120, n_files))
-        assert raw.rdd.getNumPartitions() == n_files
+    one_wave = f"rangepartitioning(grp ASC NULLS FIRST, url ASC NULLS FIRST, {par}"
+    buckets = f"hashpartitioning(bucket, {CFG.num_buckets}"
+
+    def exchanges(raw):
         out = pending_output(raw, CFG, range(CFG.groups), par)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert len(re.findall(r"Exchange hashpartitioning\(bucket", plan)) == want, plan
         assert "BroadcastExchange" not in plan
+        return re.sub(r"#\d+", "", " ".join(re.findall(r"Exchange (\w+\([^)]*)", plan)))
+
+    whole = spark.read.parquet(_pages_files(tmp_path, "whole", 120, par))
+    assert whole.rdd.getNumPartitions() == par
+    assert exchanges(whole) == ""
+    src = _pages_files(tmp_path, "partial", 120, par + 1)
+    raw = spark.read.parquet(src)
+    assert raw.rdd.getNumPartitions() == par + 1
+    n_bytes = scan_bytes(raw)
+    assert n_bytes == sum(os.path.getsize(os.path.join(src, f)) for f in os.listdir(src))
+    assert exchanges(raw) == one_wave
+    monkeypatch.setattr(P, "TASK_MIN_BYTES", n_bytes // CFG.num_buckets + 1)
+    assert exchanges(raw) == one_wave
+    monkeypatch.setattr(P, "TASK_MIN_BYTES", n_bytes // CFG.num_buckets)
+    assert exchanges(raw) == buckets
+
+
+def test_one_file_input_runs_one_wave(spark, tmp_path):
+    """A 1-file input is one scan partition, a partial wave: its write stage
+    runs exactly one task per core (one Python worker setup each), not one
+    per bucket, and each task writes a contiguous run of groups."""
+    sc = spark.sparkContext
+    src = write_pages_parquet(str(tmp_path / "pages1.parquet"), 120)
+    sc.setLocalProperty("spark.jobGroup.id", "one_wave")
+    try:
+        counters = run_pipeline(spark, src, str(tmp_path / "out"), CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counters["docs_seen"] == 120
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup("one_wave")))
+    write_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert write_stage.numTasks == sc.defaultParallelism != CFG.num_buckets
+    part_files = glob.glob(str(tmp_path / "out" / "data" / "group=*" / "*.parquet"))
+    assert len(part_files) <= sc.defaultParallelism + CFG.groups - 1
 
 
 def test_one_write_job_per_run(spark, tmp_path, one_file_per_partition):

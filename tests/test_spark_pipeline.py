@@ -338,7 +338,7 @@ def test_salted_host_metrics_equals_unsalted(spark, pipeline_out, pages_small):
             for u, r in pipeline_out[1].items()
         ]
     )
-    salted = {r["host"]: r.asDict() for r in host_metrics(out_df, CFG).collect()}
+    salted = {r["host"]: r.asDict() for r in host_metrics(out_df).collect()}
     host = F.regexp_extract(F.col("url"), r"https?://([^/]+)/", 1).alias("host")
     plain = {
         r["host"]: r.asDict()
