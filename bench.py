@@ -186,8 +186,9 @@ def run_aux_benches(sf: float) -> dict:
       head. bucket_max_over_mean shows the pipeline's url-hash bucketing is
       itself immune to host skew (~1.0 on the hot corpus).
     - csv_redact: the csv_redactor surface at bench scale — 25k rows x 10
-      PII-bearing columns through detect -> redact -> single-Exchange wide
-      reassembly -> ordered sink (plan pinned in tests)."""
+      PII-bearing columns through the row-order range partition -> one
+      detect + redact UDF over the wide rows -> CSV sink (one Exchange,
+      plan pinned in tests)."""
     import shutil
 
     from pyspark.sql import functions as F

@@ -65,7 +65,8 @@ SEVERITY_COLORS: Dict[str, Tuple[float, float, float]] = {
 
 def color_of(entity_type: str) -> Tuple[float, float, float]:
     """Severity color for an entity type (entity_config.py color lookup):
-    severity_of() then the color map, defaulting to ``_default``."""
+    the type's severity (``ENTITY_SEVERITY``, else ``DEFAULT_SEVERITY``)
+    then the color map, defaulting to ``_default``."""
     return SEVERITY_COLORS.get(
         ENTITY_SEVERITY.get(entity_type, DEFAULT_SEVERITY), SEVERITY_COLORS["_default"]
     )
@@ -160,11 +161,6 @@ ENTITY_GROUPS: Dict[str, List[str]] = {
 PERSON_TYPES: FrozenSet[str] = frozenset(
     {"PERSON", "PERSON_WITH_TITLE", "PERSON_AFTER_GREETING", "REPEATED_NAME"}
 )
-
-
-def severity_of(entity_type: str) -> str:
-    """entity_config.py:128-129 (get_entity_severity)."""
-    return ENTITY_SEVERITY.get(entity_type, DEFAULT_SEVERITY)
 
 
 def expand_entities(entities: Optional[Iterable[str]]) -> Optional[Set[str]]:

@@ -28,12 +28,6 @@ def hash64(s: str) -> int:
     return int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[8:], "little")
 
 
-def hash64_signed(s: str) -> int:
-    """Two's-complement view, matching ``CAST(md5_number_lower(s) AS BIGINT)``."""
-    v = hash64(s)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
 _word_re = re.compile(NONSPACE_RUN)  # engine-portable \S+ (core.casefold)
 
 

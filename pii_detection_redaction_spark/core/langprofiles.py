@@ -68,8 +68,6 @@ CHARSETS = {
     "pt": "ãõÃÕ",
 }
 
-CJK_RANGE = ("一", "鿿")
-
 # Content vocabulary per language for synthetic text + LM seed corpora.
 CONTENT_WORDS = {
     "en": (

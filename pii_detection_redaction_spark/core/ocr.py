@@ -43,10 +43,6 @@ OCR_WRAP_COLS = 80
 # reference image_redactor/redactor.py:20-27 RedactionStyle defaults
 IMG_PADDING = 2
 IMG_FILL_RGB = (0.0, 0.0, 0.0)  # '#000000' (analyzer.py --fill default)
-IMG_OUTLINE_RGB = (255, 0, 0)
-IMG_BLUR_RADIUS = 8
-IMG_PIXEL_SIZE = 12
-IMG_STROKE_WIDTH = 3
 # reference image_redactor/redactor.py:48 redact_file default
 IMG_SCORE_THRESHOLD = 0.35
 

@@ -32,7 +32,6 @@ canonicalizes to ``?id=7&page=2``, a DIFFERENT page than the bare URL.
 from __future__ import annotations
 
 import re
-from typing import List, Tuple
 
 from .casefold import simple_lower
 
@@ -67,17 +66,6 @@ HOST_USERINFO_RE = r"^[^@]*@"
 HOST_PORT_RE = r":[0-9]+$"
 # step 7
 TRAILING_SLASH_RE = r"/+$"
-
-# (pattern, replacement) pairs applied in order BEFORE the authority step —
-# replacement is engine-neutral (no backrefs) except TRACKING_RE
-PRE_AUTH_STEPS: List[Tuple[str, str]] = [
-    (FRAGMENT_RE, ""),
-    # TRACKING_RE handled separately (backref spelling differs per engine)
-    (QMARK_AMP_RE, "?"),
-    (MULTI_AMP_RE, "&"),
-    (TRAILING_SEP_RE, ""),
-]
-
 
 def canonicalize_url(url: str) -> str:
     """Pure-Python mirror of the Spark/DuckDB expression chain (unit-test

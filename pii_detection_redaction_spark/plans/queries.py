@@ -7,8 +7,8 @@ Conventions (driver contract, __spark_entry__.py):
 - floating aggregates are rounded (sums→2dp, ratios→6dp) so
   cross-engine summation-order differences can't flip the value hash;
 - unsigned 64-bit hashes (DuckDB UBIGINT) are exposed as signed BIGINT
-  two's-complement on both sides (core.hashing.hash64_signed ==
-  ``u64_signed_sql``).
+  two's-complement on both sides (Spark's LongType; ``u64_signed_sql``
+  in the DuckDB oracles).
 
 Non-SQL-expressible queries (full regex bank with context boost, LM
 perplexity) are value-gated through golden parquets instead: the pure-Python

@@ -13,10 +13,10 @@ directory sinks). Within that contract the heavy work is still distributed:
 every CSV runs the single-Exchange cell-redaction plan, all TXT files are
 ONE DataFrame (file-parallel ``spark.read.text(wholetext)``) through one
 Arrow detect+scrub pass, and per-file artifacts come back through
-``coalesce(1)`` Spark writes (one header, input row order) rather than a
-driver collect of cell data. Only the zip packaging itself is driver-side
-file IO, bounded by the export size — identical to the reference's
-in-memory zip buffer.
+``coalesce(1)`` Spark writes of the materialized redaction (one header,
+input row order) rather than a driver collect of cell data. Only the zip
+packaging itself is driver-side file IO, bounded by the export size —
+identical to the reference's in-memory zip buffer.
 
 JSON detections shape: a JSON array (``ensure_ascii=False, indent=2``) of
 {row, column, entity_type, start, end, score, value, cell_value} —
@@ -40,21 +40,17 @@ from pyspark.sql import functions as F
 
 from ..core.sanitize import claim_filename, safe_filename
 from ..functions.udfs import make_detect_udf, make_scrub_udf
-from ..operators.csvops import cell_detections_long
-from .csv import ROW_FILE, ROW_ID, read_csv, redact_csv, write_csv
+from .csv import ROW_ID, read_csv, redact_csv, write_csv
 
 
 def _single_csv(df: DataFrame, dest: str, delimiter: str, header: bool) -> None:
-    """Materialize one ordered CSV file: global sort on the row-order key,
-    THEN coalesce(1) (coalesce preserves partition order over the sorted
-    range partitions), so the single part carries one header and the input
-    row order — reference redactor.py:124-126 writes rows in input order."""
-    internal = [c for c in (ROW_FILE, ROW_ID) if c in df.columns]
-    if internal:
-        df = df.orderBy(*internal)
+    """Materialize one CSV file with one header: ``coalesce(1)`` reads
+    ``df``'s partitions in index order, so ``redact_csv``'s frame keeps the
+    input row order without a sort (``sources.csv`` module docstring).
+    ``df`` must read a materialized cache: the coalesce would otherwise
+    pull the upstream Python stage into its one task."""
     tmp = dest + ".spark-tmp"
-    write_csv(df.coalesce(1), tmp, delimiter=delimiter, header=header,
-              ordered=False)
+    write_csv(df.coalesce(1), tmp, delimiter=delimiter, header=header)
     (part,) = glob.glob(os.path.join(tmp, "part-*"))
     os.replace(part, dest)
     shutil.rmtree(tmp)
@@ -136,10 +132,10 @@ def batch_redact(
         )
         try:
             if max_export_rows is not None:
-                # BEFORE the expensive reassembly+write: the guard exists
-                # to veto the work, not to complain after it ran. The
-                # counts are the first action, so they also materialize
-                # the shared detect cache that everything below reads.
+                # BEFORE the full redaction pass and write: the guard
+                # exists to veto the work, not to complain after it ran.
+                # Its limit counts run the UDF on only part of the input;
+                # the count below is what fills the cache.
                 n_rows = df.limit(max_export_rows + 1).count()
                 n_det = out["detections"].limit(max_export_rows + 1).count()
                 if max(n_rows, n_det) > max_export_rows:
@@ -151,6 +147,10 @@ def batch_redact(
                         f"use run_csv_redact / the directory sinks for large "
                         f"extracts, or pass max_export_rows=None"
                     )
+            # materialize the persisted UDF output, so _single_csv's
+            # coalesce(1) reads cached partitions instead of running the
+            # Python stage in its one task
+            out["cached"].count()
             red_name = claim_filename(f"{stem}_redacted.csv", used_names)
             red_path = os.path.join(output_dir, red_name)
             _single_csv(out["redacted"], red_path, delimiter, header)

@@ -2,28 +2,37 @@
 (redact_csv_file, ``csv_redactor/redactor.py:55-128``) as Spark source→sink.
 
 read.csv (header/delimiter options == reference skip_header/delimiter params)
-→ unpivot → per-cell detect → mask/replace → reassemble wide → write.csv,
-plus the JSON detections sink (``csv_redactor/cli.py:172-178`` analog) and
-the stderr summary (``formatter.py:24-37``).
+→ range partition + local sort on the row-order key → ONE Arrow UDF over the
+wide rows (per-cell detect + mask/replace, ``operators.csvops``) →
+write.csv, plus the JSON detections sink (``csv_redactor/cli.py:172-178``
+analog) and the stderr summary (``formatter.py:24-37``).
+
+Row-order contract: output rows come in input order — per file, files in
+lexicographic path order (the reference CLI writes rows in input order,
+redactor.py:124-126). ``redact_csv`` establishes that order BELOW the
+Python node, and nothing above it moves rows, so every sink writes its
+partitions in index order and the part files, read in name order, are the
+input. The sort must sit below the UDF: PySpark's Arrow eval nodes drop
+their child's partitioning, so an ``orderBy`` above the UDF adds a second
+range exchange whose sampling job re-runs the whole Python pass.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.csvops import (
     cell_detections_long,
-    detect_cells,
     detection_summary,
-    redact_cells,
-    unpivot_cells,
+    make_wide_redact_udf,
 )
 
 ROW_ID = "__row_id"
 ROW_FILE = "__row_file"
+CELLS = "__cells"
 
 
 def read_csv(
@@ -35,12 +44,12 @@ def read_csv(
 ) -> DataFrame:
     """CSV source with a row-order contract usable for multi-file inputs.
 
-    ``__row_id`` (monotonically_increasing_id) is the unique reassembly key;
+    ``__row_id`` (monotonically_increasing_id) is the unique row key;
     ``__row_file`` (the ``_metadata.file_path`` hidden column) records each
-    row's source file. The ordered sink sorts on (file, id): a bare
-    ``__row_id`` sort would replay Spark's SCAN-PARTITION order — file
+    row's source file. ``redact_csv`` orders on (file, id): a bare
+    ``__row_id`` order would replay Spark's SCAN-PARTITION order — file
     splits are bin-packed in size-descending order, so for a directory input
-    the biggest file would come first regardless of its name. Sorting by
+    the biggest file would come first regardless of its name. Ordering by
     file first pins the contract to (file path lexicographic, position
     within file); within one file, ids rise with read order in every split,
     and splits of one file keep offset order under the planner's stable
@@ -62,6 +71,12 @@ def read_csv(
     )
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a column reference that Spark does not parse: dots
+    would otherwise read as struct access."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def redact_csv(
     df: DataFrame,
     use_entity_labels: bool = False,
@@ -75,55 +90,78 @@ def redact_csv(
     'summary': per-entity-type counts}. ``include_cell_value`` adds the full
     cell text to the detections table (the JSON export shape).
 
-    ``cache=True`` persists the per-cell detection frame: the three outputs
-    share its lineage, and a caller materializing all three (the CLI job)
-    would otherwise run the regex bank over every cell three times."""
+    Plan: the ``read_csv`` frame is range-partitioned on (``__row_file``,
+    ``__row_id``) into ``max(defaultParallelism, scan partitions)``
+    partitions — one wave on small inputs, the scan's own split count on
+    large ones; an explicit count, so AQE does not coalesce the exchange
+    into one task — and sorted within partitions on the same key. Then
+    ``operators.csvops.make_wide_redact_udf`` runs once per row over all
+    value columns. That exchange is the plan's only one; ``redacted``
+    projects the redacted cells out of the UDF's struct, and
+    ``detections`` is an ``inline`` of (column, cell, detections) per row
+    fed to ``cell_detections_long`` — no shuffle either. ``redacted`` is in
+    input order partition by partition, and sinks must not re-sort it
+    (module docstring).
+
+    ``cache=True`` persists the UDF's output frame: the three outputs share
+    its lineage, and a caller materializing all three (the CLI job) would
+    otherwise run the Python pass three times."""
     value_cols = [c for c in df.columns if c not in (ROW_ID, ROW_FILE)]
     passthrough = [ROW_FILE] if ROW_FILE in df.columns else []
-    long = unpivot_cells(df, ROW_ID, value_cols, passthrough_cols=passthrough)
-    # detect_cells keeps every (row, col) pair alive (empty cells gated, not
-    # filtered), so the long frame alone carries everything reassembly needs.
-    detected = detect_cells(long, entities=entities, min_score=min_score)
-    if cache:
-        detected = detected.persist()
-    detections = cell_detections_long(
-        detected, ROW_ID, include_cell_value=include_cell_value
+    key = passthrough + [ROW_ID]
+    n_parts = max(
+        df.sparkSession.sparkContext.defaultParallelism,
+        df.rdd.getNumPartitions(),
     )
-
-    # Single-shuffle wide reassembly: one groupBy(row) builds a col->cell map
-    # per row, columns project out of the map. Exchange count is 1 regardless
-    # of column count (the former per-column join chain was N shuffles for an
-    # N-column CSV — plan-shape test pins the new shape). The source-file
-    # column joins the grouping key (it is constant per row id), so the
-    # ordered sink can sort (file, id) without a join back to the source.
-    redacted_long = redact_cells(
-        detected, use_entity_labels=use_entity_labels, redaction_char=redaction_char
-    ).select(ROW_ID, *passthrough, "col_name", "redacted_cell")
-    wide = (
-        redacted_long.groupBy(ROW_ID, *passthrough)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("col_name", "redacted_cell"))
-            ).alias("__cells")
-        )
+    # value columns are renamed v<i>: header text never reaches a field path
+    vals = [f"v{i}" for i in range(len(value_cols))]
+    udf = make_wide_redact_udf(
+        len(value_cols), entities=entities, min_score=min_score,
+        use_entity_labels=use_entity_labels, redaction_char=redaction_char,
+    )
+    fused = (
+        df.repartitionByRange(n_parts, *key)
+        .sortWithinPartitions(*key)
         .select(
-            ROW_ID,  # kept so sinks can restore input row order (write_csv)
-            *passthrough,
-            *[
-                F.element_at(F.col("__cells"), F.lit(c)).alias(c)
-                for c in value_cols
-            ],
+            *key,
+            *[F.col(_quoted(c)).cast("string").alias(v) for c, v in zip(value_cols, vals)],
         )
+        .withColumn(CELLS, udf(F.struct(*vals)))
     )
+    if cache:
+        fused = fused.persist()
 
+    redacted = fused.select(
+        ROW_ID,
+        *passthrough,
+        *[F.col(CELLS)[f"r{i}"].alias(c) for i, c in enumerate(value_cols)],
+    )
+    long = fused.select(
+        ROW_ID,
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("col_name"),
+                        F.col(v).alias("cell"),
+                        F.col(CELLS)[f"d{i}"].alias("detections"),
+                    )
+                    for i, (c, v) in enumerate(zip(value_cols, vals))
+                ]
+            )
+        ),
+    )
+    detections = cell_detections_long(
+        long, ROW_ID, include_cell_value=include_cell_value
+    )
     return {
-        "redacted": wide,
+        "redacted": redacted,
         "detections": detections,
         "summary": detection_summary(detections, ROW_ID),
         # the persisted handle (None when cache=False): callers that loop
         # over many files must unpersist it after materializing the outputs,
-        # or the cached detection partitions accumulate for the whole batch
-        "cached": detected if cache else None,
+        # or the cached partitions accumulate for the whole batch
+        "cached": fused if cache else None,
     }
 
 
@@ -132,20 +170,15 @@ def write_csv(
     path: str,
     delimiter: str = ",",
     header: bool = True,
-    ordered: bool = True,
 ) -> None:
     """CSV sink. The internal ``__row_id`` / ``__row_file`` columns are
-    dropped before writing; ``ordered=True`` (default) first sorts on
-    (source file, row id) so the redacted output preserves input row order —
-    per file, files in lexicographic path order — essential for header-less/
-    positional CSVs where no column correlates rows otherwise (the reference
-    CLI writes rows in input order, redactor.py:124-126)."""
+    dropped before writing. Rows are written as they are partitioned, with
+    no sort (module docstring): ``redact_csv``'s part files, read in name
+    order, are the input rows."""
     internal = [c for c in (ROW_FILE, ROW_ID) if c in df.columns]
-    if internal:
-        if ordered:
-            df = df.orderBy(*internal)
-        df = df.drop(*internal)
-    df.write.mode("overwrite").csv(path, sep=delimiter, header=header)
+    df.drop(*internal).write.mode("overwrite").csv(
+        path, sep=delimiter, header=header
+    )
 
 
 def detections_to_json(

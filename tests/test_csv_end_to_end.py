@@ -3,14 +3,25 @@
 import csv
 import glob
 
-from pyspark.sql import functions as F
+import pytest
+from pyspark.sql import types as T
 
+from pii_detection_redaction_spark.operators.csvops import (
+    cell_detections_long,
+    detect_cells,
+    detection_summary,
+    redact_cells,
+    unpivot_cells,
+)
 from pii_detection_redaction_spark.sources.csv import (
+    ROW_FILE,
+    ROW_ID,
     detections_to_json,
     read_csv,
     redact_csv,
     write_csv,
 )
+from pii_detection_redaction_spark.testing.corpus import write_wide_csv
 
 
 def _write_input(path):
@@ -202,3 +213,149 @@ def test_detections_json_directory_source_per_file_rows(spark, tmp_path):
     assert {k: sorted(v) for k, v in by_file.items()} == {
         name: list(range(n)) for name, n in sizes.items()
     }
+
+
+def _edge_csv(path):
+    """Headers with ' ` \\ and . in them; NULL (unquoted empty), "",
+    " ", "\\t" and NBSP-only cells next to PII-bearing ones."""
+    lines = [
+        "employee's email,back`tick,price\\total,a.b,notes",
+        'bob.smith@ex.com,,"", ,\t',
+        '\u00a0,olivia.baker@ex.com,0412 345 678,tfn 123-456-789,"  "',
+        ",,,,",
+        'Call Bob Smith on 0412 345 678,x,\u00a0\u00a0,"a, b",plain',
+    ]
+    with open(path, "w", encoding="utf-8", newline="") as f:
+        f.write("\n".join(lines) + "\n")
+    return path
+
+
+def _part_lines(out_dir):
+    """Each part file under ``out_dir``, in name order, as its lines."""
+    parts = []
+    for part in sorted(glob.glob(f"{out_dir}/part-*.csv")):
+        with open(part, "rb") as f:
+            parts.append(f.read().split(b"\n")[:-1])
+    return parts
+
+
+def _long_form(df, use_entity_labels=False, redaction_char="*",
+               min_score=0.0, entities=None):
+    """The same redaction through the long-form operators: unpivot, one
+    UDF per step, rows rebuilt on the driver in (file, row id) order."""
+    value_cols = [c for c in df.columns if c not in (ROW_ID, ROW_FILE)]
+    long = unpivot_cells(df, ROW_ID, value_cols, passthrough_cols=[ROW_FILE])
+    detected = detect_cells(long, entities=entities, min_score=min_score)
+    red = redact_cells(detected, use_entity_labels=use_entity_labels,
+                       redaction_char=redaction_char)
+    cells = {}
+    for f, rid, col, cell in red.select(
+        ROW_FILE, ROW_ID, "col_name", "redacted_cell"
+    ).collect():
+        cells.setdefault((f, rid), {})[col] = cell
+    rows = [[cells[k][c] for c in value_cols] for k in sorted(cells)]
+    dets = cell_detections_long(detected, ROW_ID, include_cell_value=True)
+    return rows, dets
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"use_entity_labels": True},
+        {"entities": ["EMAIL_ADDRESS", "AU_TFN"]},
+        {"min_score": 0.6, "redaction_char": "#"},
+    ],
+    ids=["mask", "labels", "entity_subset", "min_score"],
+)
+def test_fused_redaction_equals_long_form(spark, tmp_path, kw):
+    """``redact_csv``'s one-UDF wide plan gives exactly the long-form
+    operators' cells (NULL stays NULL, blank cells pass through), the same
+    detections with ``cell_value`` and the same summary — in input row
+    order, both collected and written."""
+    wide = write_wide_csv(str(tmp_path / "wide"), 240, n_files=3, seed=5)
+    edge = _edge_csv(str(tmp_path / "edge.csv"))
+    for src in (wide, edge):
+        df = read_csv(spark, src)
+        value_cols = df.columns[:-2]
+        want_rows, want_dets = _long_form(df, **kw)
+        out = redact_csv(df, cache=True, include_cell_value=True, **kw)
+        try:
+            red = out["redacted"]
+            assert red.columns == [ROW_ID, ROW_FILE, *value_cols]
+            assert [list(r)[2:] for r in red.collect()] == want_rows
+            # the same writer over the long-form rows in one partition
+            want_df = spark.createDataFrame(
+                want_rows, T.StructType([T.StructField(c, T.StringType()) for c in value_cols])
+            )
+            write_csv(want_df.coalesce(1), str(tmp_path / "want"))
+            write_csv(red, str(tmp_path / "got"))
+            (want,) = _part_lines(tmp_path / "want")
+            got = _part_lines(tmp_path / "got")
+            assert all(part[0] == want[0] for part in got)  # one header each
+            assert [line for part in got for line in part[1:]] == want[1:]
+            got_dets = out["detections"]
+            assert got_dets.columns == want_dets.columns
+            assert sorted(got_dets.collect()) == sorted(want_dets.collect())
+            assert want_dets.count() > 0
+            assert (out["summary"].collect()
+                    == detection_summary(want_dets, ROW_ID).collect())
+        finally:
+            out["cached"].unpersist()
+
+
+@pytest.mark.parametrize(
+    "n_files,split_bytes", [(1, None), (8, None), (1, 4096)],
+    ids=["1_file", "8_files", "1_file_many_splits"],
+)
+def test_csv_redaction_runs_python_stage_once(spark, tmp_path, n_files, split_bytes):
+    """read_csv -> redact_csv -> write_csv runs three stages: the range
+    bounds' sample and the exchange's map stage over the scan, then ONE
+    stage that runs the Python UDF and writes (an order-by above the UDF
+    would add a second pass; ``sources.csv`` module docstring). That stage
+    has defaultParallelism tasks, or the scan's split count when the scan
+    has more splits than cores."""
+    sc = spark.sparkContext
+    src = write_wide_csv(str(tmp_path / "in"), 400, n_files=n_files, seed=3)
+    key = "spark.sql.files.maxPartitionBytes"
+    if split_bytes:
+        spark.conf.set(key, split_bytes)
+    group = f"csv_python_once_{n_files}_{split_bytes}"
+    try:
+        df = read_csv(spark, src)
+        scan = df.rdd.getNumPartitions()
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        write_csv(redact_csv(df)["redacted"], str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        if split_bytes:
+            spark.conf.unset(key)
+    n_python = max(scan, sc.defaultParallelism)
+    if split_bytes:
+        assert scan > sc.defaultParallelism
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    ran = [
+        info.numTasks
+        for j in sorted(tracker.getJobIdsForGroup(group))
+        for info in map(tracker.getStageInfo, sorted(tracker.getJobInfo(j).stageIds))
+        if info.numCompletedTasks
+    ]
+    assert ran == [scan, scan, n_python]
+    parts = glob.glob(str(tmp_path / "out" / "part-*.csv"))
+    assert len(parts) == n_python
+
+
+def test_redact_csv_frame_not_from_read_csv(spark):
+    """A frame without ``__row_file`` (not a ``read_csv`` file scan) is
+    ordered on ``__row_id`` alone and comes back in row order."""
+    df = spark.createDataFrame(
+        [(i, f"user{i}@ex.com" if i % 2 else "plain") for i in range(40)],
+        f"{ROW_ID} long, contact string",
+    )
+    red = redact_csv(df)["redacted"]
+    assert red.columns == [ROW_ID, "contact"]
+    rows = red.collect()
+    assert [r[ROW_ID] for r in rows] == list(range(40))
+    assert all((r["contact"] == "plain") == (r[ROW_ID] % 2 == 0) for r in rows)
+    assert all("@" not in r["contact"] for r in rows)

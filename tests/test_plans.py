@@ -91,13 +91,29 @@ def test_sql_function_registration(spark, pages_small):
         assert r["n"] == len(dets)
 
 
-def test_csv_reassembly_single_shuffle_any_width(spark, tmp_path):
-    """Wide reassembly is ONE Exchange (groupBy row -> map rebuild) no matter
-    how many columns the CSV has — the former per-column join chain was one
-    shuffle per column."""
+def test_csv_reassembly_single_shuffle_any_width(spark, tmp_path, monkeypatch):
+    """CSV redaction is ONE Exchange no matter how many columns the CSV
+    has: the range partition on the row-order key, BELOW the only Python
+    node (one UDF over the wide rows — no unpivot, no regroup shuffle).
+    The sink adds none (``sources.csv`` module docstring)."""
     import csv as _csv
+    import re
 
-    from pii_detection_redaction_spark.sources.csv import read_csv, redact_csv
+    from pii_detection_redaction_spark.sources.csv import read_csv, redact_csv, write_csv
+
+    # record every frame the sink writes
+    written = []
+    frame_cls = type(spark.range(1))
+    real_write = frame_cls.write
+    monkeypatch.setattr(
+        frame_cls, "write",
+        property(lambda df: written.append(df) or real_write.fget(df)),
+    )
+
+    def simple(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        )
 
     for n_cols in (3, 9):
         path = str(tmp_path / f"wide_{n_cols}.csv")
@@ -108,10 +124,17 @@ def test_csv_reassembly_single_shuffle_any_width(spark, tmp_path):
             for r in range(4):
                 w.writerow([f"v{r}_{i}" for i in range(n_cols)])
         out = redact_csv(read_csv(spark, path))["redacted"]
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "simple"
-        )
+        plan = simple(out)
         assert plan.count("Exchange") == 1, (n_cols, plan)
+        assert re.search(
+            r"Exchange rangepartitioning\(__row_file#\d+ ASC NULLS FIRST, "
+            r"__row_id#\d+L ASC NULLS FIRST, \d+\)", plan
+        ), plan
+        assert plan.count("ArrowEvalPython") == 1, plan
+        # explain prints the root first: the Python node is above the exchange
+        assert plan.index("ArrowEvalPython") < plan.index("Exchange"), plan
+        write_csv(out, str(tmp_path / f"out_{n_cols}"))
+        assert simple(written[-1]).count("Exchange") == 1, simple(written[-1])
 
 
 def test_pipeline_quality_classifier_fused(spark, pages_small):
