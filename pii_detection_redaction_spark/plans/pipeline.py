@@ -44,8 +44,9 @@ from ..sources.snapshots import SnapshotStore
 
 SALT_BUCKETS = 16
 # Input bytes (pages parquet) a Python task should carry at the least: every
-# task pays a fixed worker setup (~0.2 s) before its first row, about a
-# tenth of the fused stage's one-core time over 2 MiB.
+# task pays a fixed worker setup before its first row (50-80 ms for an empty
+# task on local[4]). Sized when that setup was ~0.2 s, about a tenth of the
+# fused stage's one-core time over 2 MiB.
 TASK_MIN_BYTES = 2 << 20
 
 

@@ -174,10 +174,13 @@ def write_csv(
     """CSV sink. The internal ``__row_id`` / ``__row_file`` columns are
     dropped before writing. Rows are written as they are partitioned, with
     no sort (module docstring): ``redact_csv``'s part files, read in name
-    order, are the input rows."""
+    order, are the input rows. Cells keep their leading and trailing
+    whitespace, as the reference's Python ``csv`` writer does (Spark's
+    writer trims both by default)."""
     internal = [c for c in (ROW_FILE, ROW_ID) if c in df.columns]
     df.drop(*internal).write.mode("overwrite").csv(
-        path, sep=delimiter, header=header
+        path, sep=delimiter, header=header,
+        ignoreLeadingWhiteSpace=False, ignoreTrailingWhiteSpace=False,
     )
 
 

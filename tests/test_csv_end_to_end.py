@@ -2,6 +2,7 @@
 
 import csv
 import glob
+import io
 
 import pytest
 from pyspark.sql import types as T
@@ -13,6 +14,7 @@ from pii_detection_redaction_spark.operators.csvops import (
     redact_cells,
     unpivot_cells,
 )
+from pii_detection_redaction_spark.sources.batch import batch_redact
 from pii_detection_redaction_spark.sources.csv import (
     ROW_FILE,
     ROW_ID,
@@ -73,6 +75,37 @@ def test_csv_redaction_roundtrip(spark, tmp_path):
     assert written
     j = detections_to_json(out["detections"]).collect()
     assert all(r["json"].startswith("{") for r in j)
+
+
+def _csv_bytes(rows):
+    buf = io.StringIO()
+    csv.writer(buf, lineterminator="\n").writerows(rows)
+    return buf.getvalue().encode()
+
+
+def test_whitespace_cells_written_as_read(spark, tmp_path):
+    """Cells of only whitespace and cells with leading or trailing blanks are
+    written as read, as Python's ``csv`` writer writes them: Spark's CSV
+    writer trims both ends of every cell unless told not to."""
+    rows = [
+        ["name", "notes", "pad"],
+        [" ", "\t", " x "],
+        ["bob.smith@ex.com", " spaced ", "  "],
+        ["plain", "\t tab lead", "trail\t"],
+    ]
+    masked = [rows[0], rows[1], ["*" * 16, *rows[2][1:]], rows[3]]
+    src = tmp_path / "in" / "ws.csv"
+    src.parent.mkdir()
+    src.write_bytes(_csv_bytes(rows))
+
+    write_csv(redact_csv(read_csv(spark, str(src)))["redacted"], str(tmp_path / "out"))
+    parts = _part_lines(tmp_path / "out")
+    assert all(part[0] == parts[0][0] for part in parts)  # one header each
+    lines = [parts[0][0]] + [line for part in parts for line in part[1:]]
+    assert b"\n".join(lines) + b"\n" == _csv_bytes(masked)
+
+    batch_redact(spark, str(src.parent), str(tmp_path / "batch"), save_json=False)
+    assert (tmp_path / "batch" / "ws_redacted.csv").read_bytes() == _csv_bytes(masked)
 
 
 def test_multifile_csv_preserves_input_order(spark, tmp_path):
