@@ -11,7 +11,6 @@ reference repo ``manansvr/pii-detection-redaction`` (studied read-only at
 - ``operators``  text operators (dedup, web, text stats, layout, OCR).
 - ``sources``    readers + snapshot-manifest sink with checkpoint resume.
 - ``plans``      end-to-end pipeline assembly + SparkSession builder.
-- ``streaming``  structured-streaming variants (thin wrappers).
 - ``testing``    deterministic synthetic corpus generators (seeded, no I/O).
 """
 

@@ -6,7 +6,7 @@ defined so it is *expressible identically three ways*:
 
 1. this pure-Python oracle (golden labels),
 2. Spark DataFrame column expressions (``..functions.quality``) — JVM-side,
-   whole-stage-codegen'd, no Python in the hot path,
+   no Python in the hot path,
 3. ANSI SQL for the DuckDB differential oracle (``__spark_entry__``).
 
 Word-based rules auto-pass for char-based languages (``CHAR_BASED_LANGS`` =
@@ -113,8 +113,10 @@ def rule_flags_batch(metrics, lang) -> Dict[str, np.ndarray]:
     ``metrics`` maps the ``text_metrics`` fields to per-document arrays (a
     dict, or the frame of JVM-computed metric columns); ``lang`` holds each
     document's (predicted) language. NULL and ``und`` take the word-based
-    branches and pass the English-only stopword rule — the same as
-    ``functions.quality.rule_flag_columns``."""
+    branches and pass the English-only stopword rule — the same as the
+    DuckDB oracle's ``plans.oracles.RULE_FLAGS_SQL``. This is the one
+    Spark-side spelling of the thresholds: the fused pipeline UDF applies
+    it, and the catalog's rule entries read its result."""
     lang = np.asarray(lang, dtype=object)
     ws_lang = ~np.isin(lang, list(CHAR_BASED_LANGS))
     n_words = np.asarray(metrics["n_words"])

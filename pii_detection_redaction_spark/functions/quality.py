@@ -1,27 +1,29 @@
-"""Quality metrics/rules as Spark column expressions (no Python in hot path).
+"""Quality metrics as Spark column expressions (no Python in hot path).
 
 Mirrors ``core.quality`` metric-for-metric — same regexes, same arithmetic,
-same guards — so Spark output equals the oracle bit-for-bit while staying
-entirely inside whole-stage codegen (these are the Gopher/C4-style rules the
-survey maps to plain column expressions, SURVEY.md §2.11).
+same guards — so Spark output equals the oracle bit-for-bit (these are the
+Gopher/C4-style metrics the survey maps to plain column expressions,
+SURVEY.md §2.11). They are JVM expressions but not all whole-stage code:
+the line metrics' ``transform``/``filter`` lambdas run interpreted, and so
+does the Project that holds them.
 
-``add_quality_columns(df, text_col, lang_col)`` appends:
-  metric cols: n_chars n_words mean_word_len symbol_ratio stop_hits n_lines
-               dup_line_frac ellipsis_line_frac
-  rule flags:  rule_<name> for core.quality.RULE_NAMES
-  rules_pass:  conjunction of the heuristic rules
+``quality_metric_columns(text)`` returns the metric columns: n_chars
+n_words mean_word_len symbol_ratio stop_hits n_lines dup_line_frac
+ellipsis_line_frac tox_hits. The rule thresholds over them are
+``core.quality.rule_flags_batch``, applied in the pipeline's fused UDF under
+its language prediction.
 """
 
 from __future__ import annotations
 
 import re as _re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..core import casefold as CF
 from ..core import quality as Q
-from ..core.toxicity import MAX_TOXICITY_HITS, TOXIC_MASK, TOXICITY_REGEX
+from ..core.toxicity import TOXIC_MASK, TOXICITY_REGEX
 
 # One spec, three engines: the word/nonspace classes come from
 # core.casefold (the explicit six-char ASCII set — Java's own \S equals it,
@@ -132,46 +134,6 @@ def quality_metric_columns(text: Column) -> dict:
         ),
         "tox_hits": F.regexp_count(text, F.lit(TOXICITY_RE_JVM)),
     }
-
-
-def rule_flag_columns(m: dict, lang: Column) -> dict:
-    # NULL-lang rows (e.g. WARC sources carry no label) must take the
-    # WORD-based branches and auto-pass stopwords, exactly like the Python
-    # oracle's rule_flags(text, None): unguarded, NULL.isin() is NULL, so
-    # F.when falls to the char-based branch and `NULL != 'en'` turns
-    # rules_pass itself NULL — engine and oracle would fork on every
-    # unlabeled row.
-    ws_lang = F.coalesce(~lang.isin(list(Q.CHAR_BASED_LANGS)), F.lit(True))
-    lang_nn = F.coalesce(lang, F.lit(""))
-    return {
-        "min_words": F.when(ws_lang, m["n_words"] >= Q.MIN_WORDS).otherwise(
-            m["n_chars"] >= Q.MIN_WORDS
-        ),
-        "max_words": m["n_words"] <= Q.MAX_WORDS,
-        "mean_word_len": F.when(
-            ws_lang,
-            (m["mean_word_len"] >= Q.MIN_MEAN_WORD_LEN)
-            & (m["mean_word_len"] <= Q.MAX_MEAN_WORD_LEN),
-        ).otherwise(F.lit(True)),
-        "symbol_ratio": m["symbol_ratio"] <= Q.MAX_SYMBOL_RATIO,
-        "stopwords": (lang_nn != "en") | (m["stop_hits"] >= Q.MIN_STOPWORD_HITS),
-        "dup_lines": m["dup_line_frac"] <= Q.MAX_DUP_LINE_FRAC,
-        "ellipsis_lines": m["ellipsis_line_frac"] <= Q.MAX_ELLIPSIS_LINE_FRAC,
-        "toxicity": m["tox_hits"] <= MAX_TOXICITY_HITS,
-    }
-
-
-def add_quality_columns(df: DataFrame, text_col: str, lang_col: str) -> DataFrame:
-    text, lang = F.col(text_col), F.col(lang_col)
-    metrics = quality_metric_columns(text)
-    for name, col in metrics.items():
-        df = df.withColumn(name, col)
-    flags = rule_flag_columns({k: F.col(k) for k in metrics}, lang)
-    passed = F.lit(True)
-    for name in Q.RULE_NAMES:
-        df = df.withColumn(f"rule_{name}", flags[name])
-        passed = passed & F.col(f"rule_{name}")
-    return df.withColumn("rules_pass", passed)
 
 
 # --- Gopher repetition metrics (core.quality.repetition_metrics spec) ------
@@ -296,7 +258,8 @@ def c4_filter_lines(
 ):
     """(id, text_clean, n_lines_removed): the C4 line filter (Raffel et al.
     2020 §2.2) as pure row-local JVM higher-order expressions — no shuffle,
-    no Python, whole-stage codegen; at 100 TB this runs at scan speed."""
+    no Python (the ``filter`` lambda runs interpreted); at 100 TB this runs
+    at scan speed."""
     lines, kept = c4_lines_kept_cols(F.col(text_col))
     return df.select(
         F.col(id_col),

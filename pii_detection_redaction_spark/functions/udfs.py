@@ -45,9 +45,6 @@ DETECTION_FIELDS = [
 ]
 DETECTION_TYPE = T.StructType(DETECTION_FIELDS)
 DETECTIONS_TYPE = T.ArrayType(DETECTION_TYPE)
-LANGID_TYPE = T.StructType(
-    [T.StructField("lang", T.StringType()), T.StructField("conf", T.DoubleType())]
-)
 
 
 def extract_text_expr(html_col):
@@ -55,8 +52,8 @@ def extract_text_expr(html_col):
     inverse of ``testing.corpus.render_html`` and byte-equal to
     ``core.extract.extract_text`` on that structure: extract ``<p>`` bodies,
     join with newline, reverse html.escape(quote=False) (&lt; &gt; first,
-    &amp; last). Whole-stage-codegen'd: no Python, no Arrow transfer of the
-    ~30 MB/50k-doc html payload."""
+    &amp; last). JVM only (the ``transform`` lambda runs interpreted): no
+    Python, no Arrow transfer of the ~30 MB/50k-doc html payload."""
     s = F.decode(html_col, "UTF-8")
     parts = F.regexp_extract_all(s, F.lit("<p>(.*?)</p>"), 1)
     # per-paragraph nested-tag strip BEFORE the join (core.extract order:
@@ -219,14 +216,6 @@ def langid_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lang": lang_out, "conf": conf_out})
 
 
-def make_langid_udf():
-    @pandas_udf(LANGID_TYPE)
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        return langid_batch(texts)
-
-    return langid_udf
-
-
 FTLANG_TYPE = T.StructType(
     [T.StructField("lang", T.StringType()), T.StructField("prob", T.DoubleType())]
 )
@@ -323,21 +312,6 @@ def _shipped(value, spark=None):
     return lambda: bc.value
 
 
-def make_perplexity_udf():
-    """(text, lang) -> double. The LMs are trained once on the driver and
-    broadcast (``_shipped``), so executor workers do zero training —
-    measured to remove a ~1s-per-worker-per-language first-task stall.
-    Scoring batches group by lang (``core.lm.perplexity_many``)."""
-    get_models = _shipped(_lm.all_models())
-
-    @pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-        return pd.Series(_lm.perplexity_many(
-            texts.fillna("").to_numpy(), langs.to_numpy(), get_models()))
-
-    return ppl_udf
-
-
 QUALITY_SCRUB_TYPE = T.StructType(
     [
         T.StructField("lang", T.StringType()),
@@ -377,8 +351,8 @@ def make_quality_scrub_udf(
     (text, metrics_struct) -> (lang, conf, ppl, drop_reasons, detections,
     scrubbed_text, q_prob).
 
-    The JVM still owns the heavy quality METRICS (regexp counts, line dedup —
-    whole-stage-codegen'd); this UDF is a straight sequence of the shared
+    The JVM still owns the heavy quality METRICS (regexp counts, line
+    dedup); this UDF is a straight sequence of the shared
     batch stages: ``langid_batch`` → ``core.lm.perplexity_many`` →
     ``core.quality.rule_flags_batch`` / ``drop_reasons_batch`` (the flags
     need the language prediction, which is made here) → ``detect_batch`` and

@@ -14,17 +14,15 @@ Scale design notes (the point of each choice):
   is uniform unless two docs are near-identical (exactly the rows we want
   colliding). Equal-key skew from boilerplate dupes is handled by AQE skew
   join; band width r trades recall vs join fan-out: P(collide) = 1-(1-s^r)^b.
-- SimHash: 64-bit fingerprint per doc; near-dup = Hamming distance <= k.
-  Banding trick for the join: split 64 bits into (k+1) blocks — two docs
-  within distance k must agree exactly on >= 1 block (pigeonhole), so the
-  join keys on (block_idx, block_value) instead of an O(n^2) cross join.
+- SimHash: 64-bit fingerprint per doc (row-local UDF work), one column of
+  the per-doc fingerprint family.
 - n-gram Jaccard verify: exact similarity on LSH candidates only (cheap,
   row-pair-local).
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -73,31 +71,6 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    k: int = 3,
-) -> DataFrame:
-    """(id, sig: array<decimal-ish bigint-as-string?>) — signatures computed
-    in an Arrow-batched UDF; unsigned 64-bit values are exposed as
-    ``decimal(20,0)``-compatible strings cast to DOUBLE-safe BIGINT via
-    signed two's complement for storage efficiency."""
-    # fail on the DRIVER, not inside the first executor task
-    H.minhash_signature("", num_hashes=num_hashes)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            sig = H.minhash_signature(t or "", num_hashes=num_hashes, k=k)
-            out.append([v - (1 << 64) if v >= (1 << 63) else v for v in sig])
-        return pd.Series(out)
-
-    return df.select(F.col(id_col), sig_udf(F.col(text_col)).alias("sig"))
 
 
 def minhash_band_table(
@@ -200,59 +173,6 @@ def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         return pd.Series(out)
 
     return df.select(F.col(id_col), sim_udf(F.col(text_col)).alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Pairs within Hamming distance <= max_hamming via the block-pigeonhole
-    join (no cross join): split 64 bits into max_hamming+1 blocks; matching
-    pairs must share at least one exact block."""
-    nblocks = max_hamming + 1
-    width = 64 // nblocks
-    sims = simhash_table(df, id_col, text_col)
-
-    blocks = sims.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block_idx"),
-                        F.shiftrightunsigned(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("block_val"),
-                    )
-                    for i in range(nblocks)
-                ]
-            )
-        ).alias("blk"),
-    ).select(id_col, "simhash", "blk.block_idx", "blk.block_val")
-
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return cand.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming
-    ).select("id_a", "id_b", "hamming")
 
 
 # ---------------------------------------------------------------------------

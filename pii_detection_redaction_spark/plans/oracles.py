@@ -79,113 +79,6 @@ _SYMBOLS = Q.SYMBOL_REGEX  # THE symbol-class spec (core.quality) — no fork
 # Java spec folds ASCII only (core.casefold.ascii_ci_expand)
 _STOPS = ascii_ci_expand(Q.STOPWORD_REGEX)
 
-_METRICS_CTE = f"""
-WITH m AS (
-  SELECT doc_id, lang, text,
-    length(text) AS n_chars,
-    len(regexp_extract_all(text, '{_WORDS}')) AS n_words,
-    len(regexp_extract_all(text, '{_NONSPACE}')) AS nonspace,
-    len(regexp_extract_all(text, '{_SYMBOLS}')) AS n_symbols,
-    len(regexp_extract_all(text, '{_STOPS}')) AS stop_hits,
-    len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) AS tox_hits,
-    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
-                x -> x <> '') AS lines
-  FROM documents
-), mm AS (
-  SELECT doc_id, lang, n_chars, n_words, stop_hits, tox_hits,
-    CASE WHEN n_words > 0 THEN CAST(nonspace AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
-    CASE WHEN n_chars > 0 THEN CAST(n_symbols AS DOUBLE) / n_chars ELSE 0.0 END AS symbol_ratio,
-    len(lines) AS n_lines,
-    CASE WHEN len(lines) > 0
-         THEN 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines)
-         ELSE 0.0 END AS dup_line_frac,
-    CASE WHEN len(lines) > 0
-         THEN CAST(len(list_filter(lines, x -> x LIKE '%...' OR x LIKE '%…')) AS DOUBLE) / len(lines)
-         ELSE 0.0 END AS ellipsis_line_frac
-  FROM m
-), fl AS (
-  SELECT *,
-    CASE WHEN lang NOT IN {_CHAR_LANGS_SQL} THEN n_words >= {Q.MIN_WORDS} ELSE n_chars >= {Q.MIN_WORDS} END AS rule_min_words,
-    n_words <= {Q.MAX_WORDS} AS rule_max_words,
-    CASE WHEN lang NOT IN {_CHAR_LANGS_SQL}
-         THEN mean_word_len >= {Q.MIN_MEAN_WORD_LEN} AND mean_word_len <= {Q.MAX_MEAN_WORD_LEN}
-         ELSE TRUE END AS rule_mean_word_len,
-    symbol_ratio <= {Q.MAX_SYMBOL_RATIO} AS rule_symbol_ratio,
-    (lang <> 'en' OR stop_hits >= {Q.MIN_STOPWORD_HITS}) AS rule_stopwords,
-    dup_line_frac <= {Q.MAX_DUP_LINE_FRAC} AS rule_dup_lines,
-    ellipsis_line_frac <= {Q.MAX_ELLIPSIS_LINE_FRAC} AS rule_ellipsis_lines,
-    tox_hits <= {MAX_TOXICITY_HITS} AS rule_toxicity
-  FROM mm
-)
-"""
-
-_RULES_PASS = " AND ".join(f"rule_{n}" for n in Q.RULE_NAMES)
-
-# word-3gram shingle list from a word array `ws` (matches core.hashing.shingles)
-_SHINGLES = (
-    "CASE WHEN len(ws) = 0 THEN CAST([] AS VARCHAR[]) "
-    "WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')] "
-    "ELSE list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END"
-)
-
-ORACLE_SQL = {}
-
-# ---------------------------------------------------------------------------
-# documents: quality / stats / langid
-# ---------------------------------------------------------------------------
-
-ORACLE_SQL["doc_quality_flags"] = (
-    _METRICS_CTE
-    + f"""
-SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
-  round(mean_word_len, 6) AS mean_word_len,
-  round(symbol_ratio, 6) AS symbol_ratio,
-  CAST(stop_hits AS INTEGER) AS stop_hits,
-  CAST(tox_hits AS INTEGER) AS tox_hits,
-  round(dup_line_frac, 6) AS dup_line_frac,
-  {', '.join(f'rule_{n}' for n in Q.RULE_NAMES)},
-  ({_RULES_PASS}) AS rules_pass
-FROM fl ORDER BY doc_id
-"""
-)
-
-ORACLE_SQL["quality_funnel"] = (
-    _METRICS_CTE
-    + f"""
-SELECT CASE {' '.join(f"WHEN NOT rule_{n} THEN '{n}'" for n in Q.RULE_NAMES)}
-            ELSE 'kept' END AS first_fail,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM fl GROUP BY first_fail ORDER BY first_fail
-"""
-)
-
-ORACLE_SQL["doc_quality_agg"] = (
-    _METRICS_CTE
-    + f"""
-SELECT lang, count(*) AS n_docs,
-  CAST(sum(CASE WHEN {_RULES_PASS} THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
-  {', '.join(f'CAST(sum(CASE WHEN NOT rule_{n} THEN 1 ELSE 0 END) AS BIGINT) AS fail_{n}' for n in Q.RULE_NAMES)}
-FROM fl GROUP BY lang ORDER BY lang
-"""
-)
-
-ORACLE_SQL["toxicity_scrub"] = f"""
-SELECT doc_id,
-  CAST(len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) AS INTEGER) AS tox_hits,
-  len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) <= {MAX_TOXICITY_HITS} AS rule_toxicity,
-  md5(regexp_replace(text, '{TOXICITY_REGEX_CI}', '{TOXIC_MASK}', 'g')) AS masked_md5
-FROM documents ORDER BY doc_id
-"""
-
-ORACLE_SQL["doc_token_stats"] = f"""
-SELECT doc_id,
-  CAST(length(text) AS INTEGER) AS n_chars,
-  CAST(len(regexp_extract_all(text, '{_WORDS}')) AS INTEGER) AS n_words,
-  CAST(len(regexp_extract_all(text, '{_q(TOKEN_RE)}')) AS INTEGER) AS n_tokens
-FROM documents ORDER BY doc_id
-"""
-
-
 def _langid_sql() -> str:
     """Generated from the same language tables as the Python/UDF/JVM paths
     (``_SCORED_LANGS``, ``SCRIPT_OVERRIDES``): per-language stopword/charset
@@ -264,6 +157,122 @@ SELECT doc_id,
   CASE {nl.join(lang_arms)} END AS lang_pred,
   round(CASE {nl.join(conf_arms)} END, 6) AS lang_conf
 FROM s ORDER BY doc_id
+"""
+
+
+# The eight rule flags over the metric columns and a ``lang`` column — the
+# SQL spelling of ``core.quality.rule_flags_batch``. NULL and 'und' take the
+# word-based branches and pass the English-only stopword rule, as there.
+_LANG = "coalesce(lang, '')"
+RULE_FLAGS_SQL = f"""
+    CASE WHEN {_LANG} NOT IN {_CHAR_LANGS_SQL} THEN n_words >= {Q.MIN_WORDS} ELSE n_chars >= {Q.MIN_WORDS} END AS rule_min_words,
+    n_words <= {Q.MAX_WORDS} AS rule_max_words,
+    CASE WHEN {_LANG} NOT IN {_CHAR_LANGS_SQL}
+         THEN mean_word_len >= {Q.MIN_MEAN_WORD_LEN} AND mean_word_len <= {Q.MAX_MEAN_WORD_LEN}
+         ELSE TRUE END AS rule_mean_word_len,
+    symbol_ratio <= {Q.MAX_SYMBOL_RATIO} AS rule_symbol_ratio,
+    ({_LANG} <> 'en' OR stop_hits >= {Q.MIN_STOPWORD_HITS}) AS rule_stopwords,
+    dup_line_frac <= {Q.MAX_DUP_LINE_FRAC} AS rule_dup_lines,
+    ellipsis_line_frac <= {Q.MAX_ELLIPSIS_LINE_FRAC} AS rule_ellipsis_lines,
+    tox_hits <= {MAX_TOXICITY_HITS} AS rule_toxicity"""
+
+# metrics and rule flags per document, judged under DuckDB's own language
+# prediction (the langid_documents oracle) — the language the pipeline's
+# keep decision uses
+_METRICS_CTE = f"""
+WITH m AS (
+  SELECT doc_id, l.lang_pred AS lang, text,
+    length(text) AS n_chars,
+    len(regexp_extract_all(text, '{_WORDS}')) AS n_words,
+    len(regexp_extract_all(text, '{_NONSPACE}')) AS nonspace,
+    len(regexp_extract_all(text, '{_SYMBOLS}')) AS n_symbols,
+    len(regexp_extract_all(text, '{_STOPS}')) AS stop_hits,
+    len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) AS tox_hits,
+    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
+                x -> x <> '') AS lines
+  FROM documents JOIN ({_langid_sql()}) l USING (doc_id)
+), mm AS (
+  SELECT doc_id, lang, n_chars, n_words, stop_hits, tox_hits,
+    CASE WHEN n_words > 0 THEN CAST(nonspace AS DOUBLE) / n_words ELSE 0.0 END AS mean_word_len,
+    CASE WHEN n_chars > 0 THEN CAST(n_symbols AS DOUBLE) / n_chars ELSE 0.0 END AS symbol_ratio,
+    len(lines) AS n_lines,
+    CASE WHEN len(lines) > 0
+         THEN 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / len(lines)
+         ELSE 0.0 END AS dup_line_frac,
+    CASE WHEN len(lines) > 0
+         THEN CAST(len(list_filter(lines, x -> x LIKE '%...' OR x LIKE '%…')) AS DOUBLE) / len(lines)
+         ELSE 0.0 END AS ellipsis_line_frac
+  FROM m
+), fl AS (
+  SELECT *, {RULE_FLAGS_SQL}
+  FROM mm
+)
+"""
+
+_RULES_PASS = " AND ".join(f"rule_{n}" for n in Q.RULE_NAMES)
+
+# word-3gram shingle list from a word array `ws` (matches core.hashing.shingles)
+_SHINGLES = (
+    "CASE WHEN len(ws) = 0 THEN CAST([] AS VARCHAR[]) "
+    "WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')] "
+    "ELSE list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) END"
+)
+
+ORACLE_SQL = {}
+
+# ---------------------------------------------------------------------------
+# documents: quality / stats / langid
+# ---------------------------------------------------------------------------
+
+ORACLE_SQL["doc_quality_flags"] = (
+    _METRICS_CTE
+    + f"""
+SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
+  round(mean_word_len, 6) AS mean_word_len,
+  round(symbol_ratio, 6) AS symbol_ratio,
+  CAST(stop_hits AS INTEGER) AS stop_hits,
+  CAST(tox_hits AS INTEGER) AS tox_hits,
+  round(dup_line_frac, 6) AS dup_line_frac,
+  {', '.join(f'rule_{n}' for n in Q.RULE_NAMES)},
+  ({_RULES_PASS}) AS rules_pass
+FROM fl ORDER BY doc_id
+"""
+)
+
+ORACLE_SQL["quality_funnel"] = (
+    _METRICS_CTE
+    + f"""
+SELECT CASE {' '.join(f"WHEN NOT rule_{n} THEN '{n}'" for n in Q.RULE_NAMES)}
+            ELSE 'kept' END AS first_fail,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM fl GROUP BY first_fail ORDER BY first_fail
+"""
+)
+
+ORACLE_SQL["doc_quality_agg"] = (
+    _METRICS_CTE
+    + f"""
+SELECT lang AS lang_pred, count(*) AS n_docs,
+  CAST(sum(CASE WHEN {_RULES_PASS} THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
+  {', '.join(f'CAST(sum(CASE WHEN NOT rule_{n} THEN 1 ELSE 0 END) AS BIGINT) AS fail_{n}' for n in Q.RULE_NAMES)}
+FROM fl GROUP BY lang ORDER BY lang
+"""
+)
+
+ORACLE_SQL["toxicity_scrub"] = f"""
+SELECT doc_id,
+  CAST(len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) AS INTEGER) AS tox_hits,
+  len(regexp_extract_all(text, '{TOXICITY_REGEX_CI}')) <= {MAX_TOXICITY_HITS} AS rule_toxicity,
+  md5(regexp_replace(text, '{TOXICITY_REGEX_CI}', '{TOXIC_MASK}', 'g')) AS masked_md5
+FROM documents ORDER BY doc_id
+"""
+
+ORACLE_SQL["doc_token_stats"] = f"""
+SELECT doc_id,
+  CAST(length(text) AS INTEGER) AS n_chars,
+  CAST(len(regexp_extract_all(text, '{_WORDS}')) AS INTEGER) AS n_words,
+  CAST(len(regexp_extract_all(text, '{_q(TOKEN_RE)}')) AS INTEGER) AS n_tokens
+FROM documents ORDER BY doc_id
 """
 
 

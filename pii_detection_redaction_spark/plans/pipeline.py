@@ -3,8 +3,8 @@
 Spark-first assembly of the reference's text pipeline (entry point B,
 ``text_detector/cli.py`` → SURVEY.md §3.2) extended with the north-rule
 quality-filter stages. A run is ONE narrow Spark job over every pending
-bucket group — parquet scan (column-pruned) → codegen'd quality expressions
-→ Arrow UDFs → write partitioned on the group — with shuffles only at the
+bucket group — parquet scan (column-pruned) → JVM quality expressions →
+Arrow UDFs → write partitioned on the group — with shuffles only at the
 repartition of a partial-wave scan and the metrics aggregation.
 
 Scale design:
@@ -121,9 +121,11 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     frame with extraction, langid, perplexity, quality, detections, scrub.
 
     Physical shape (deliberate): exactly ONE Python eval node — fused
-    langid+perplexity+detect+scrub — with extraction and all quality rules
-    as codegen'd JVM expressions. History: five separate UDF stages measured
-    ~2x slower than two (per-stage Arrow round-trips); round 2 fused two
+    langid+perplexity+rules+detect+scrub — with extraction and the quality
+    metrics as JVM expressions (the metric Project runs interpreted: its
+    line lambdas are not whole-stage code). History: five separate UDF
+    stages measured ~2x slower than two (per-stage Arrow round-trips);
+    round 2 fused two
     into one by passing the JVM-computed ``rules_pass`` INTO the UDF so the
     keep-gating happens Python-side — the text now crosses the Arrow
     boundary once, and the JVM no longer materializes a gated third copy.
@@ -185,7 +187,7 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     else:
         df = df.withColumn("boiler_removed", F.lit(0).cast("long"))
 
-    # Quality METRICS first (JVM, codegen'd, language-independent), then the
+    # Quality METRICS first (JVM, language-independent), then the
     # one fused UDF which makes the language prediction, applies the rule
     # thresholds (they depend on that prediction), and detects+scrubs the
     # kept docs. See make_quality_scrub_udf for the split rationale.

@@ -18,26 +18,20 @@ oracle reads it back — every catalog entry carries a value-level oracle.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import quality as Q
 from ..core.toxicity import MAX_TOXICITY_HITS, TOXIC_MASK
-from ..functions.quality import (
-    TOXICITY_RE_JVM,
-    add_quality_columns,
-)
-from ..functions.udfs import (
-    make_detect_udf,
-    make_ftlang_udf,
-    make_ftquality_udf,
-    make_langid_udf,
-    make_perplexity_udf,
-    make_scrub_udf,
-)
+from ..functions.quality import TOXICITY_RE_JVM
+from ..functions.udfs import make_detect_udf, make_ftlang_udf, make_scrub_udf
 from ..operators import dedup as D
 from ..operators import web as W
 from ..operators import textstats as TS
+from .pipeline import PipelineConfig, transform_pages
 
 # Severity dimension rows — single spec source (core.entities.SEVERITY_DIM,
 # transcribed from the reference's entity_config.py:5-38); the DuckDB oracle
@@ -71,6 +65,28 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+def _pipeline_documents(
+    spark: SparkSession, sf_dir: str, quality_classifier: bool = False
+) -> DataFrame:
+    """The shipped pipeline plan (``transform_pages``) over the documents
+    table: the entries that compose langid, perplexity and the rules select
+    from it, so the differential gates the keep decision that ships."""
+    return transform_pages(
+        _t_wide(spark, sf_dir, "documents"),
+        PipelineConfig(quality_classifier=quality_classifier),
+    )
+
+
+def _rule_flags() -> dict:
+    """rule_<n> per ``RULE_NAMES`` entry, read from the pipeline's
+    ``drop_reasons`` (the rules judged under its language prediction)."""
+    return {n: ~F.array_contains("drop_reasons", n) for n in Q.RULE_NAMES}
+
+
+def _rules_pass(flags: dict):
+    return reduce(operator.and_, flags.values())
+
+
 def u64_signed_sql(expr: str) -> str:
     """DuckDB: UBIGINT expression -> signed BIGINT two's complement."""
     return (
@@ -85,21 +101,17 @@ def u64_signed_sql(expr: str) -> str:
 
 
 def q_doc_quality_flags(spark, sf_dir):
-    """Per-doc quality profile: the frozen Gopher/C4 rule flags (pure JVM
-    expressions, full DuckDB re-derivation) plus the fastText-architecture
-    quality classifier's probability/label (core.ftquality — DCLM/FineWeb
-    model-based-filter pattern; golden parquet gate). quality_label compares
-    the UNROUNDED probability against the threshold (matching the golden);
-    the prob is rounded 6dp for the value hash."""
+    """Per-doc quality profile: the JVM quality metrics and the frozen
+    Gopher/C4 rule flags of the shipped pipeline (full DuckDB
+    re-derivation) plus the fastText-architecture quality classifier's
+    probability/label, scored in the same fused UDF (core.ftquality —
+    DCLM/FineWeb model-based-filter pattern; golden parquet gate).
+    quality_label compares the UNROUNDED probability against the threshold
+    (matching the golden); the prob is rounded 6dp for the value hash."""
     from ..core.ftquality import QUALITY_THRESHOLD
 
-    d = _t_wide(spark, sf_dir, "documents")
-    fq = make_ftquality_udf(spark)
-    # single pass: add_quality_columns keeps text, so the classifier UDF
-    # rides the same projection — no two-branch self-join shuffle
-    out = add_quality_columns(d, "text", "lang").withColumn(
-        "qp", fq(F.col("text"))
-    )
+    out = _pipeline_documents(spark, sf_dir, quality_classifier=True)
+    flags = _rule_flags()
     return out.select(
         "doc_id",
         "n_words",
@@ -108,10 +120,10 @@ def q_doc_quality_flags(spark, sf_dir):
         "stop_hits",
         "tox_hits",
         F.round("dup_line_frac", 6).alias("dup_line_frac"),
-        *[F.col(f"rule_{n}").alias(f"rule_{n}") for n in Q.RULE_NAMES],
-        "rules_pass",
-        F.round(F.col("qp"), 6).alias("quality_prob"),
-        (F.col("qp") >= QUALITY_THRESHOLD).alias("quality_label"),
+        *[flags[n].alias(f"rule_{n}") for n in Q.RULE_NAMES],
+        _rules_pass(flags).alias("rules_pass"),
+        F.round("quality_prob", 6).alias("quality_prob"),
+        (F.col("quality_prob") >= QUALITY_THRESHOLD).alias("quality_label"),
     ).orderBy("doc_id")
 
 
@@ -119,15 +131,15 @@ def q_quality_funnel(spark, sf_dir):
     """Drop-reason funnel: each document attributed to its FIRST failing
     quality rule (core.quality.RULE_NAMES order — the order a pipeline
     operator would short-circuit in), 'kept' otherwise. The report a corpus
-    curator reads before retuning thresholds. Pure JVM CASE over the rule
-    flags + one tiny (reason,count) aggregation."""
-    d = _t(spark, sf_dir, "documents")
-    out = add_quality_columns(d, "text", "lang")
+    curator reads before retuning thresholds: a CASE over the pipeline's
+    rule flags + one tiny (reason,count) aggregation."""
+    flags = _rule_flags()
     first_fail = F.lit("kept")
     for n in reversed(Q.RULE_NAMES):
-        first_fail = F.when(~F.col(f"rule_{n}"), F.lit(n)).otherwise(first_fail)
+        first_fail = F.when(~flags[n], F.lit(n)).otherwise(first_fail)
     return (
-        out.select(first_fail.alias("first_fail"))
+        _pipeline_documents(spark, sf_dir)
+        .select(first_fail.alias("first_fail"))
         .groupBy("first_fail")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("first_fail")
@@ -135,15 +147,14 @@ def q_quality_funnel(spark, sf_dir):
 
 
 def q_doc_quality_agg(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    out = add_quality_columns(d, "text", "lang")
+    flags = _rule_flags()
     aggs = [F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("rules_pass").cast("long")).alias("n_pass")]
-    aggs += [
-        F.sum((~F.col(f"rule_{n}")).cast("long")).alias(f"fail_{n}")
-        for n in Q.RULE_NAMES
-    ]
-    return out.groupBy("lang").agg(*aggs).orderBy("lang")
+            F.sum(_rules_pass(flags).cast("long")).alias("n_pass")]
+    aggs += [F.sum((~flags[n]).cast("long")).alias(f"fail_{n}") for n in Q.RULE_NAMES]
+    return (
+        _pipeline_documents(spark, sf_dir)
+        .groupBy("lang_pred").agg(*aggs).orderBy("lang_pred")
+    )
 
 
 def q_doc_token_stats(spark, sf_dir):
@@ -169,26 +180,21 @@ def q_doc_token_stats(spark, sf_dir):
 
 def q_langid_documents(spark, sf_dir):
     """Both language-ID implementations side by side, one row per doc: the
-    heuristic stopword/charset scorer (evidence counts are SQL-expressible —
-    full DuckDB re-derivation) and the fastText-architecture classifier
-    (hashed char n-grams against a driver-trained broadcast matrix — golden
-    parquet gate, a trained model is not re-derivable in ANSI SQL)."""
-    d = _t_wide(spark, sf_dir, "documents")
-    lid = make_langid_udf()
+    pipeline's heuristic stopword/charset scorer (evidence counts are
+    SQL-expressible — full DuckDB re-derivation) and the
+    fastText-architecture classifier (hashed char n-grams against a
+    driver-trained broadcast matrix — golden parquet gate, a trained model
+    is not re-derivable in ANSI SQL)."""
     ft = make_ftlang_udf(spark)
-    # single pass: both Arrow UDFs evaluate in ONE projection (Spark fuses
-    # adjacent Python UDFs into one ArrowEvalPython node — text crosses the
-    # Arrow boundary once); a two-branch self-join would shuffle instead
+    # single pass: the classifier UDF rides the pipeline's projection over
+    # one scan; a two-branch self-join would shuffle instead
     return (
-        d.select(
-            "doc_id",
-            lid(F.col("text")).alias("lid"),
-            ft(F.col("text")).alias("ft"),
-        )
+        _pipeline_documents(spark, sf_dir)
+        .withColumn("ft", ft(F.col("text")))
         .select(
             "doc_id",
-            F.col("lid.lang").alias("lang_pred"),
-            F.round(F.col("lid.conf"), 6).alias("lang_conf"),
+            "lang_pred",
+            F.round("lang_conf", 6).alias("lang_conf"),
             F.col("ft.lang").alias("ft_lang"),
             F.round(F.col("ft.prob"), 6).alias("ft_prob"),
         )
@@ -701,69 +707,33 @@ def q_ppl_buckets(spark, sf_dir):
     see ppl_threshold_buckets). Oracle: DuckDB runs the same NTILE over the
     quality-pipeline golden parquet (same rounded ppl, same (ppl, doc_id)
     total order), so the window arithmetic itself is cross-engine-checked."""
-    d = _t_wide(spark, sf_dir, "documents")
-    lid = make_langid_udf()
-    ppl = make_perplexity_udf()
-    d = d.withColumn("lid", lid(F.col("text")))
-    d = (
-        d.withColumn("lang_pred", F.col("lid.lang"))
-        .drop("lid")
-        .withColumn("ppl", F.round(ppl(F.col("text"), F.col("lang_pred")), 4))
-    )
+    d = _pipeline_documents(spark, sf_dir).select(
+        "doc_id", "lang_pred", F.round("ppl", 4).alias("ppl"))
     out = TS.ppl_tertile_buckets(d)
     return out.select("doc_id", "lang_pred", "ppl", "ppl_bucket").orderBy("doc_id")
 
 
 def q_quality_pipeline(spark, sf_dir):
-    """Full keep/drop over documents incl. langid + perplexity gates."""
-    d = _t_wide(spark, sf_dir, "documents")
-    lid = make_langid_udf()
-    ppl = make_perplexity_udf()
-    d = d.withColumn("lid", lid(F.col("text")))
-    d = (
-        d.withColumn("lang_pred", F.col("lid.lang"))
-        .withColumn("lang_conf", F.col("lid.conf"))
-        .drop("lid")
-        .withColumn("ppl", ppl(F.col("text"), F.col("lang_pred")))
-    )
-    d = add_quality_columns(d, "text", "lang_pred")
-    keep = (
-        F.col("rules_pass")
-        & (F.col("lang_conf") >= Q.MIN_LANG_CONF)
-        & (F.col("ppl") <= Q.MAX_PERPLEXITY)
-    )
-    return d.select(
-        "doc_id", "lang_pred", F.round("ppl", 4).alias("ppl"), keep.alias("keep")
+    """Full keep/drop over documents incl. langid + perplexity gates: the
+    shipped pipeline's decision (``keep`` judges the unrounded ppl)."""
+    return _pipeline_documents(spark, sf_dir).select(
+        "doc_id", "lang_pred", F.round("ppl", 4).alias("ppl"), "keep"
     ).orderBy("doc_id")
 
 
 def q_corpus_summary(spark, sf_dir):
     """Per-language corpus report — the rollup a pipeline operator reads
     after a run: doc/kept counts, keep rate, token volume, mean perplexity
-    of kept docs. Composes the langid+ppl UDF signals with JVM token counts
-    and a single groupBy; the oracle re-derives it by joining the
-    quality-pipeline golden against the SQL token expression and running
-    the same aggregation in DuckDB (the GROUP BY itself is cross-checked,
-    not read back)."""
-    d = _t_wide(spark, sf_dir, "documents")
-    lid = make_langid_udf()
-    ppl = make_perplexity_udf()
-    d = d.withColumn("lid", lid(F.col("text")))
-    d = (
-        d.withColumn("lang_pred", F.col("lid.lang"))
-        .withColumn("lang_conf", F.col("lid.conf"))
-        .drop("lid")
-        .withColumn("ppl_raw", ppl(F.col("text"), F.col("lang_pred")))
-        .withColumn("ppl", F.round("ppl_raw", 4))
-    )
-    d = add_quality_columns(d, "text", "lang_pred")
-    keep = (
-        F.col("rules_pass")
-        & (F.col("lang_conf") >= Q.MIN_LANG_CONF)
-        & (F.col("ppl_raw") <= Q.MAX_PERPLEXITY)
-    )
-    d = d.withColumn("keep", keep).withColumn(
-        "n_tokens", F.regexp_count(F.col("text"), F.lit(TS.TOKEN_RE))
+    of kept docs. Composes the pipeline's langid/ppl/keep columns with JVM
+    token counts and a single groupBy; the oracle re-derives it by joining
+    the quality-pipeline golden against the SQL token expression and
+    running the same aggregation in DuckDB (the GROUP BY itself is
+    cross-checked, not read back)."""
+    d = _pipeline_documents(spark, sf_dir).select(
+        "lang_pred",
+        "keep",
+        F.round("ppl", 4).alias("ppl"),
+        F.regexp_count(F.col("text"), F.lit(TS.TOKEN_RE)).alias("n_tokens"),
     )
     return (
         d.groupBy("lang_pred")

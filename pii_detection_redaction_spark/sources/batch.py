@@ -221,8 +221,8 @@ def batch_redact(
             )
         )
         # toLocalIterator, not collect: one row per txt file, each holding
-        # the full text twice (raw + scrubbed) — streaming keeps resident
-        # driver memory at the largest single file instead of the batch
+        # the full text twice (raw + scrubbed) — one row at a time keeps
+        # resident driver memory at the largest single file, not the batch
         for r in tdf.toLocalIterator():
             # input_file_name() returns a percent-encoded URI
             # ('file:///.../my%20memo.txt'): parse + unquote so output names

@@ -372,19 +372,21 @@ def test_charset_evidence_is_language_exclusive():
     assert got[0] in ("pt", "und") and got != ("es", 1.0)
 
 
-def test_rule_flags_threshold_edges_agree_across_engines(spark):
-    """The JVM ``rule_flag_columns`` and the Python ``rule_flags_batch``
-    (the fused UDF's and the oracle's one spelling) agree on hand-built
-    metric rows at every threshold and one ulp (one unit for counts) on
-    each side, for word-based, char-based, ``und`` and NULL languages."""
+def test_rule_flags_threshold_edges_agree_across_engines():
+    """The DuckDB oracle's rule flags (``plans.oracles.RULE_FLAGS_SQL``) and
+    the Python ``rule_flags_batch`` (the fused UDF's and the oracle's one
+    spelling) agree on hand-built metric rows at every threshold and one
+    ulp (one unit for counts) on each side, for word-based, char-based,
+    ``und`` and NULL languages."""
     import math
 
+    import duckdb
     import numpy as np
-    from pyspark.sql import functions as F
+    import pandas as pd
 
     from pii_detection_redaction_spark.core import quality as Q
     from pii_detection_redaction_spark.core.toxicity import MAX_TOXICITY_HITS
-    from pii_detection_redaction_spark.functions.quality import rule_flag_columns
+    from pii_detection_redaction_spark.plans.oracles import RULE_FLAGS_SQL
 
     def around(x):
         if isinstance(x, int):
@@ -410,22 +412,17 @@ def test_rule_flags_threshold_edges_agree_across_engines(spark):
     fields = list(base)
     rows = [tuple(v[f] for f in fields) + (lang,)
             for v in variants for lang in ("en", "de", "zh", "ja", "und", None)]
-    df = spark.createDataFrame(
-        rows,
-        "n_chars int, n_words int, mean_word_len double, symbol_ratio double, "
-        "stop_hits int, dup_line_frac double, ellipsis_line_frac double, "
-        "tox_hits int, lang string",
-    )
-    jvm_flags = rule_flag_columns({f: F.col(f) for f in fields}, F.col("lang"))
-    got = df.select(*[jvm_flags[n].alias(n) for n in Q.RULE_NAMES]).collect()
-    py = Q.rule_flags_batch(
-        {f: np.array([r[i] for r in rows]) for i, f in enumerate(fields)},
-        [r[-1] for r in rows],
-    )
+    frame = pd.DataFrame(rows, columns=fields + ["lang"])
+    frame["i"] = np.arange(len(frame))
+    con = duckdb.connect()
+    con.register("edges", frame)
+    got = con.execute(
+        f"SELECT {RULE_FLAGS_SQL} FROM edges ORDER BY i").df()
+    py = Q.rule_flags_batch(frame, frame["lang"])
     for name in Q.RULE_NAMES:
-        jvm = [r[name] for r in got]
-        assert jvm == py[name].tolist(), name
-        assert set(jvm) == {True, False}, name  # every edge is exercised
+        sql = got[f"rule_{name}"].tolist()
+        assert sql == py[name].tolist(), name
+        assert set(sql) == {True, False}, name  # every edge is exercised
     # NULL and 'und' take the word-based branch (and skip stopwords)
     for i, r in enumerate(rows):
         if r[-1] in (None, "und"):

@@ -131,6 +131,5 @@ def test_broadcast_models_stay_out_of_the_udf_closure(spark):
     from pii_detection_redaction_spark.functions import udfs as U
 
     for udf in (U.make_ftlang_udf(spark), U.make_ftquality_udf(spark),
-                U.make_perplexity_udf(),
                 U.make_quality_scrub_udf(quality_prob=True)):
         assert len(cloudpickle.dumps(udf.func)) < 100_000, udf.func.__name__

@@ -1,5 +1,5 @@
 """Operator tests: dedup recall on planted near-dups, cell-wise CSV
-redaction, sampling, decontamination, packing, layout/OCR, streaming drain."""
+redaction, sampling, decontamination, packing, layout/OCR."""
 
 import random
 
@@ -63,15 +63,6 @@ def test_minhash_recall_and_precision(spark, dup_df):
         assert r["jaccard"] >= 0.5
 
 
-def test_minhash_signature_matches_core(spark, dup_df):
-    rows = D.minhash_signatures(dup_df).filter(F.col("doc_id") == 0).collect()
-    text = dict(_near_dup_corpus())[0]
-    expected = [
-        v - (1 << 64) if v >= (1 << 63) else v for v in H.minhash_signature(text)
-    ]
-    assert list(rows[0]["sig"]) == expected
-
-
 def test_minhash_num_hashes_bounded(spark, dup_df):
     """num_hashes beyond the affine constant table must raise everywhere —
     silently truncating would give non-empty docs shorter signatures than
@@ -80,22 +71,12 @@ def test_minhash_num_hashes_bounded(spark, dup_df):
         H.minhash_signature("some text", num_hashes=H.MINHASH_MAX_HASHES + 1)
     with pytest.raises(ValueError, match="MINHASH_MAX_HASHES"):
         H.minhash_signature("", num_hashes=128)  # empty-doc path too
-    # operator entry points fail on the driver at plan-build time
-    with pytest.raises(ValueError, match="MINHASH_MAX_HASHES"):
-        D.minhash_signatures(dup_df, num_hashes=128)
+    # the operator entry point fails on the driver at plan-build time
     with pytest.raises(ValueError, match="MINHASH_MAX_HASHES"):
         D.minhash_band_table(dup_df, num_hashes=128)
     # the max itself works, both paths
     assert len(H.minhash_signature("abcdef", num_hashes=H.MINHASH_MAX_HASHES)) == 64
     assert len(H.minhash_signature("", num_hashes=H.MINHASH_MAX_HASHES)) == 64
-
-
-def test_simhash_near_pairs(spark, dup_df):
-    pairs = D.simhash_near_pairs(dup_df, max_hamming=10).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (0, 200) in got and (1, 201) in got  # exact dups: hamming 0
-    for r in pairs:
-        assert r["hamming"] <= 10
 
 
 def test_csv_cell_redaction(spark):
@@ -122,33 +103,6 @@ def test_csv_cell_redaction(spark):
     assert len(email_cell["redacted_cell"]) == len("bob.smith@ex.com")  # mask preserves length
     summary = detection_summary(dets, "row_id").collect()
     assert all(r["n_detections"] >= r["n_cells"] for r in summary)
-
-
-def test_streaming_pipeline_drain(spark, pages_small, tmp_path):
-    from pii_detection_redaction_spark.plans.pipeline import PipelineConfig
-    from pii_detection_redaction_spark.streaming.pipeline import stream_pipeline
-
-    import os
-
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    # file-stream sources require a directory
-    src_dir = tmp_path / "pages_in"
-    src_dir.mkdir()
-    os.symlink(pages_small, src_dir / "part-0.parquet")
-    q = stream_pipeline(
-        spark, str(src_dir), out, ckpt, PipelineConfig(num_buckets=8, groups=1)
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    assert got.count() == 500
-    assert got.filter(F.col("keep")).count() > 0
-    # second drain with no new files: exactly-once, count unchanged
-    q2 = stream_pipeline(
-        spark, str(src_dir), out, ckpt, PipelineConfig(num_buckets=8, groups=1)
-    )
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out).count() == 500
 
 
 def test_connected_components_round_count(spark):
@@ -764,54 +718,6 @@ def test_layout_round_matches_spark_round():
     # ...and plan_row's conf text takes the HALF_UP side
     row = LAY.plan_row("some sample text here", 0, 10, "EMAIL_ADDRESS", 0.625)
     assert row["conf_text"] == "conf: 0.63"
-
-
-def test_streaming_quality_prob_and_boilerplate_contract(
-    spark, pages_small, tmp_path
-):
-    """stream_pipeline honors the same PipelineConfig column contract as
-    batch: quality_classifier adds quality_prob to the streamed output, and
-    strip_boilerplate (a corpus-level batch pass with no streaming
-    equivalent) refuses loudly instead of silently no-opping."""
-    import os
-
-    from pii_detection_redaction_spark.plans.pipeline import PipelineConfig
-    from pii_detection_redaction_spark.streaming.pipeline import stream_pipeline
-
-    src_dir = tmp_path / "pages_in_q"
-    src_dir.mkdir()
-    os.symlink(pages_small, src_dir / "part-0.parquet")
-
-    with pytest.raises(ValueError, match="batch-only"):
-        stream_pipeline(
-            spark,
-            str(src_dir),
-            str(tmp_path / "never"),
-            str(tmp_path / "never_ckpt"),
-            PipelineConfig(num_buckets=8, groups=1, strip_boilerplate=True),
-        )
-
-    out = str(tmp_path / "stream_q_out")
-    q = stream_pipeline(
-        spark,
-        str(src_dir),
-        out,
-        str(tmp_path / "q_ckpt"),
-        PipelineConfig(num_buckets=8, groups=1, quality_classifier=True),
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    assert "quality_prob" in got.columns
-    # batch==stream on the annotation (identical fused UDF, one spec)
-    from pii_detection_redaction_spark.plans.pipeline import transform_pages
-
-    batch = transform_pages(
-        spark.read.parquet(pages_small),
-        PipelineConfig(num_buckets=8, groups=1, quality_classifier=True),
-    )
-    want = {r["url"]: r["quality_prob"] for r in batch.select("url", "quality_prob").collect()}
-    stream_vals = {r["url"]: r["quality_prob"] for r in got.select("url", "quality_prob").collect()}
-    assert stream_vals == want and len(stream_vals) == 500
 
 
 def test_token_shards_null_counts_fail_loudly(spark):
