@@ -6,7 +6,9 @@ import glob
 import os
 import re
 
+import py4j.clientserver
 import pytest
+from pyspark import SparkContext
 
 from pii_detection_redaction_spark.plans import pipeline as P
 from pii_detection_redaction_spark.plans.pipeline import (
@@ -217,3 +219,41 @@ def test_empty_groups_commit_zero_counters(spark, tmp_path):
     run_pipeline(spark, src, one, PipelineConfig(num_buckets=16, groups=1))
     assert read_output(spark, out).schema == read_output(spark, one).schema
     assert _sorted_rows(spark, out) == _sorted_rows(spark, one)
+
+
+def test_warm_run_py4j_budget(spark, tmp_path, monkeypatch):
+    """A warm run takes its constant Column trees from the pipeline's
+    per-gateway cache and adds each stage's columns in one pass: it stays
+    within 1,000 py4j round trips (building the trees afresh took ~2,600)."""
+    src = _pages_files(tmp_path, "pages", 120, spark.sparkContext.defaultParallelism)
+    run_pipeline(spark, src, str(tmp_path / "warm"), CFG)
+    sent = []
+    real = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(1)
+        return real(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    counters = run_pipeline(spark, src, str(tmp_path / "out"), CFG)
+    monkeypatch.undo()
+    assert counters["docs_seen"] == 120
+    assert len(sent) <= 1000, len(sent)
+
+
+def test_plan_trees_rebuilt_per_gateway(spark, monkeypatch):
+    """The same gateway returns the cached Column objects; a new gateway
+    (a relaunched JVM) rebuilds them, with the same expressions."""
+    first = P._plan_trees("bucket", 16, 4)
+    assert P._plan_trees("bucket", 16, 4) is first
+    live = SparkContext._gateway
+
+    class Relaunched:
+        def __getattr__(self, name):
+            return getattr(live, name)
+
+    monkeypatch.setattr(SparkContext, "_gateway", Relaunched())
+    rebuilt = P._plan_trees("bucket", 16, 4)
+    assert rebuilt is not first
+    assert {k: str(c) for k, c in rebuilt.items()} == {k: str(c) for k, c in first.items()}
+    assert P._plan_trees("bucket", 16, 4) is rebuilt
